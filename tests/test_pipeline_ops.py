@@ -422,6 +422,16 @@ def test_star_cc_equivalent_to_label_propagation(spark):
     assert set(comp.values()) == {0}
 
 
+def test_label_cc_raises_when_not_converged(spark):
+    """max_iter rounds without a fixed point is an error, not a labeling:
+    a 4-node chain needs more than one label-propagation round."""
+    from xema_spark import dedup
+
+    chain = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["doc_a", "doc_b"])
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        dedup.connected_components(chain, algorithm="label", max_iter=1)
+
+
 def test_star_cc_self_loop_only_doc(spark):
     """A doc appearing ONLY in self-pairs must still get a (doc, doc)
     component row from BOTH variants — drop-in equivalence (ADVICE r3:

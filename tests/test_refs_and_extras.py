@@ -79,6 +79,29 @@ class TestValidateMany:
         assert not rows[-1]["valid_pos"] and not rows[-1]["valid_named"]
         assert rows[-1]["violations_pos"][0]["keyword"] == "minimum"
 
+    def test_fail_mode_spellings_match_validate_df(self, spark):
+        """All five fail-mode spellings mean on validate_many what they mean
+        on validate_df; an unknown one raises."""
+        df = spark.createDataFrame([("no",)], "t: string")
+        rule = {"type": "object", "properties": {
+            "t": {"type": "string", "minLength": 5, "pattern": "^yes"}}}
+        modes = ("immediately", "verdict", "finally", "violations", "early")
+        out = df
+        for m in modes:  # chained: one job evaluates all five
+            out = validate_many(out, {m: rule}, mode=m)
+        row = out.collect()[0]
+        assert all(row[f"valid_{m}"] is False for m in modes)
+        assert "violations_immediately" not in out.columns
+        assert "violations_verdict" not in out.columns
+        full = ["min_length", "pattern"]
+        assert [v["keyword"] for v in row["violations_finally"]] == full
+        assert [v["keyword"] for v in row["violations_violations"]] == full
+        assert [v["keyword"] for v in row["violations_early"]] == ["min_length"]
+        with pytest.raises(ValueError, match="unknown fail mode"):
+            validate_many(df, {"r": rule}, mode="eager")
+        with pytest.raises(ValueError, match="unknown fail mode"):
+            validate_df(df, rule, mode="eager")
+
 
 class TestDraft7EdgeCases:
     def test_const_null_and_bool(self, spark):

@@ -174,6 +174,31 @@ def test_empty_micro_batch_does_not_crash(spark, tmp_path):
     assert read_verdicts(spark, out).count() == 50
 
 
+def test_micro_batch_commit_reads_only_its_own_partition(spark, tmp_path, monkeypatch):
+    """The commit aggregates its run's verdicts/run_id=<id> partition by
+    direct path, so the files it lists do not grow with the runs already in
+    the store; a run with no partition commits nothing."""
+    from xema_spark import runner
+    from xema_spark.streaming import commit_micro_batch
+
+    out = str(tmp_path / "own_out")
+    docs = gen_documents(spark, 60).select("doc_id", "spans")
+    commit_micro_batch(docs, 0, FLAGSHIP_RULE, out, n_buckets=2)
+    scanned = []
+    summary = runner._bucket_summary
+
+    def spy(this_run):
+        scanned.append(this_run.inputFiles())
+        return summary(this_run)
+
+    monkeypatch.setattr(runner, "_bucket_summary", spy)
+    rid = commit_micro_batch(docs, 1, FLAGSHIP_RULE, out, n_buckets=2)
+    assert len(scanned) == 1 and scanned[0]
+    assert all(f"/run_id={rid}/" in f for f in scanned[0])
+    assert runner.commit_lineage(spark, out, "stream-b-none", 0.0) == []
+    assert runner.read_verdicts(spark, out).count() == 120
+
+
 def test_streaming_and_batch_writers_share_one_consumer(spark, tmp_path):
     """Cross-consumer contract (VERDICT r3 #7): a directory written by BOTH
     the batch runner (run_validation) and the streaming sink

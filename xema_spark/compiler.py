@@ -22,20 +22,41 @@ typed columnar engine keep one consistent absent-vs-null story.
 Fail modes (behaviour.ex:36, validator.ex:121-169): the reference's
 `:immediately` maps to verdict-only evaluation (select just `valid`; Catalyst
 column-pruning drops every violation expression), `:finally` maps to
-selecting `violations` too. See `validate_df(mode=...)`.
+selecting `violations` too, and `:early` is compiled into each node's
+violations. validate_df, validate_many and streaming.validate_stream read
+the same mode map (`_FAIL_MODES`).
+
+Compile once per (rule, schema, options). A compile is thousands of py4j
+round trips, so `compile_rule` memoizes its top-level call when the input is
+named — col=None (the whole row) or a column name — in a bounded LRU
+(`_MEMO_SIZE`). The key is a type-faithful freeze of the normalized rule, the
+column name, `dtype.json()`, the CompileOptions, the registry objects the
+rule names (validator functions, module StructTypes) and the active
+SparkContext; the value is an unresolved Column tree that any DataFrame with
+that schema can reuse. Explicit Column inputs and the recursion below the top
+level are never cached.
+
+Thread safety: compiling is pure — options travel as an explicit, frozen
+CompileOptions argument, never as module state — and the memo's reads and
+writes hold one lock, so threads may compile concurrently, with the same or
+different options. Two threads missing on one key both compile; the first
+stored result is what every later call returns.
 """
 
 from __future__ import annotations
 
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xema_spark.rules import Rule, meta_validate, normalize_rule, resolve_pointer
+from xema_spark.rules import _VALIDATORS, Rule, meta_validate, normalize_rule, resolve_pointer
 from xema_spark import formats as _formats
 from xema_spark import interpreter as _interp
 
@@ -56,11 +77,45 @@ VIOLATION_ARRAY_TYPE = T.ArrayType(VIOLATION_STRUCT_TYPE)
 _MAX_REF_DEPTH = 64
 _FLOAT_EPS = 1e-9
 
-# Compile-scoped options (set by validate_df around compile_rule; a module
-# flag avoids threading one more parameter through every recursion site).
-# 'early' switches the per-node violation combiner to first-failing-GROUP
-# truncation (the reference's fail: :early with-chains, validator.ex:99-215).
-_OPTS = {"exact_graphemes": False, "early": False}
+
+@dataclass(frozen=True)
+class CompileOptions:
+    """Compile-scoped switches, passed explicitly down every recursion (no
+    module state, so concurrent compiles with different options cannot see
+    each other's). Frozen and hashable: the options are part of the memo key.
+
+    exact_graphemes: string lengths count grapheme clusters (a pandas UDF)
+                     instead of codepoints.
+    early:           each node keeps only its first failing with-chain step's
+                     violations (the reference's fail: :early,
+                     validator.ex:99-215)."""
+
+    exact_graphemes: bool = False
+    early: bool = False
+
+
+# fail-mode spelling -> (CompileOptions.early, select the violations column).
+# The reference's names and the engine's own mean the same everywhere
+# (behaviour.ex:36, validator.ex:121-169).
+_FAIL_MODES = {
+    "immediately": (False, False), "verdict": (False, False),
+    "finally": (False, True), "violations": (False, True),
+    "early": (True, True),
+}
+
+
+def _fail_mode(mode: str) -> tuple[bool, bool]:
+    if mode not in _FAIL_MODES:
+        raise ValueError(f"unknown fail mode {mode!r}; expected one of {sorted(_FAIL_MODES)}")
+    return _FAIL_MODES[mode]
+
+
+# Top-level compiles of name-specified inputs (col None or a column name),
+# least recently used first. Entries hold live Column trees, so the bound
+# caps the driver and JVM memory they pin.
+_MEMO_SIZE = 64
+_memo: OrderedDict = OrderedDict()
+_memo_lock = threading.Lock()
 
 # With-chain group ranks — one rank per `:ok <-` step of the reference's
 # non-:finally chains, in reference order (validator.ex:99-107 default
@@ -101,8 +156,8 @@ def _grapheme_length(col: Column) -> Column:
     return F.pandas_udf(batch, IntegerType())(col)
 
 
-def _strlen(col: Column) -> Column:
-    return _grapheme_length(col) if _OPTS["exact_graphemes"] else F.length(col)
+def _strlen(col: Column, opts: CompileOptions) -> Column:
+    return _grapheme_length(col) if opts.exact_graphemes else F.length(col)
 
 
 def _tail(col: Column, k: int) -> Column:
@@ -112,10 +167,11 @@ def _tail(col: Column, k: int) -> Column:
     return F.slice(col, k + 1, F.greatest(F.lit(0), F.size(col) - F.lit(k)))
 
 
-@dataclass
+@dataclass(frozen=True)
 class Compiled:
     """Compiled rule node: a non-null boolean verdict Column and a violations
-    array Column (empty array when valid)."""
+    array Column (empty array when valid). Frozen: memoized instances are
+    shared by every caller."""
 
     valid: Column
     violations: Column
@@ -314,15 +370,73 @@ def _quote_path_seg(name: str) -> str:
 # main compile
 # ---------------------------------------------------------------------------
 
-def compile_rule(
-    rule: Rule,
-    col: Column,
-    dtype: T.DataType,
-    path: Column | None = None,
-    root: Rule | None = None,
-    _depth: int = 0,
-) -> Compiled:
-    """Compile a normalized rule against (col, dtype); returns Compiled.
+def _freeze(x: Any, refs: list) -> Any:
+    """Hashable, type-faithful image of a normalized rule: True, 1 and 1.0
+    stay distinct, and so do a list and a tuple. Appends to `refs` what the
+    rule resolves by name from the registries (the validator function, the
+    module's StructType), so re-registering a name changes the key."""
+    if isinstance(x, dict):
+        if isinstance(x.get("validator"), str):
+            refs.append(("validator", x["validator"], _VALIDATORS.get(x["validator"])))
+        if isinstance(x.get("module"), str):
+            shape = _MODULES.get(x["module"])
+            refs.append(("module", x["module"], None if shape is None else shape.json()))
+        return (dict, tuple((_freeze(k, refs), _freeze(v, refs)) for k, v in x.items()))
+    if isinstance(x, (list, tuple)):
+        return (type(x), tuple(_freeze(v, refs) for v in x))
+    if isinstance(x, float):
+        return (float, x.hex())
+    if x is None or isinstance(x, (bool, int, str)):
+        return (type(x), x)
+    raise TypeError(f"cannot key a rule value of type {type(x).__name__}")
+
+
+def _input_column(col: str | None, dtype: T.DataType) -> Column:
+    if col is not None:
+        return F.col(col)
+    if not isinstance(dtype, T.StructType):
+        raise CompileError("col=None validates the whole row: dtype must be the row's StructType")
+    return F.struct(*[F.col(f.name) for f in dtype.fields])
+
+
+def compile_rule(rule: Rule, col: Column | str | None, dtype: T.DataType, *,
+                 opts: CompileOptions = CompileOptions()) -> Compiled:
+    """Compile a normalized rule against one input; returns Compiled.
+
+    col=None validates the whole row (dtype is the row's StructType, the
+    input the struct of all its columns); col="name" validates that column;
+    a Column validates that expression. The first two forms are memoized on
+    (rule, col, dtype, opts, the registry entries the rule names, the active
+    SparkContext): a repeat call returns the identical Compiled without a
+    py4j call. A Column is compiled afresh every time — Columns have no
+    usable equality (F.col("x") and df["x"] print alike, and two F.col("x")
+    differ by their origin), so they cannot key a memo.
+    """
+    if col is not None and not isinstance(col, str):
+        return _compile(rule, col, dtype, F.lit("$"), rule, 0, opts)
+    try:
+        refs: list = []
+        key = (_freeze(rule, refs), col, dtype.json(), opts, tuple(refs),
+               SparkContext._active_spark_context)
+        hash(key)
+    except TypeError:  # a rule value or a registered object is unhashable
+        return _compile(rule, _input_column(col, dtype), dtype, F.lit("$"), rule, 0, opts)
+    with _memo_lock:
+        if key in _memo:
+            _memo.move_to_end(key)
+            return _memo[key]
+    out = _compile(rule, _input_column(col, dtype), dtype, F.lit("$"), rule, 0, opts)
+    with _memo_lock:
+        out = _memo.setdefault(key, out)  # a racing compile of the same key wins once
+        _memo.move_to_end(key)
+        while len(_memo) > _MEMO_SIZE:
+            _memo.popitem(last=False)
+    return out
+
+
+def _compile(rule: Rule, col: Column, dtype: T.DataType, path: Column,
+             root: Rule, depth: int, opts: CompileOptions) -> Compiled:
+    """Compile a normalized rule against (col, dtype), never memoized.
 
     `root` is the rule document used to resolve local $refs ($ref inlining
     happens here at compile time, the Column-tree analogue of the reference's
@@ -330,11 +444,7 @@ def compile_rule(
     cycles terminate because recursion descends the finite Spark type tree,
     with _MAX_REF_DEPTH as a backstop for non-descending cycles).
     """
-    if path is None:
-        path = F.lit("$")
-    if root is None:
-        root = rule
-    if _depth > _MAX_REF_DEPTH:
+    if depth > _MAX_REF_DEPTH:
         raise CompileError("rule recursion exceeds max depth (circular $ref without structural descent)")
 
     # boolean schemas (validator.ex:69-71)
@@ -346,7 +456,7 @@ def compile_rule(
 
     if "ref" in rule:
         target = resolve_pointer(root, rule["ref"])
-        return compile_rule(target, col, dtype, path, root, _depth + 1)
+        return _compile(target, col, dtype, path, root, depth + 1, opts)
 
     checks: list[tuple[int, Compiled]] = []
 
@@ -419,11 +529,11 @@ def compile_rule(
     if isinstance(dtype, T.StringType):
         if "min_length" in rule:
             n = rule["min_length"]
-            checks.append((_G_T1, _check(col, _strlen(col) >= n, path, "min_length",
+            checks.append((_G_T1, _check(col, _strlen(col, opts) >= n, path, "min_length",
                                           f"string length must be >= {n}")))
         if "max_length" in rule:
             n = rule["max_length"]
-            checks.append((_G_T2, _check(col, _strlen(col) <= n, path, "max_length",
+            checks.append((_G_T2, _check(col, _strlen(col, opts) <= n, path, "max_length",
                                           f"string length must be <= {n}")))
         if "pattern" in rule:
             p = rule["pattern"]
@@ -437,29 +547,29 @@ def compile_rule(
 
     # --- array keywords ---
     if isinstance(dtype, T.ArrayType):
-        checks.extend(_compile_array(rule, col, dtype, path, root, _depth))
+        checks.extend(_compile_array(rule, col, dtype, path, root, depth, opts))
 
     # --- object keywords ---
     if isinstance(dtype, T.StructType):
-        checks.extend(_compile_struct(rule, col, dtype, path, root, _depth))
+        checks.extend(_compile_struct(rule, col, dtype, path, root, depth, opts))
     elif isinstance(dtype, T.MapType):
-        checks.extend(_compile_map(rule, col, dtype, path, root, _depth))
+        checks.extend(_compile_map(rule, col, dtype, path, root, depth, opts))
 
     # --- combiners (validator.ex:388-481) ---
     if "not" in rule:
-        sub = compile_rule(rule["not"], col, dtype, path, root, _depth + 1)
+        sub = _compile(rule["not"], col, dtype, path, root, depth + 1, opts)
         checks.append((_G_NOT, _check(col, ~sub.valid, path, "not", "value must not match schema")))
     if "all_of" in rule:
-        subs = [compile_rule(s, col, dtype, path, root, _depth + 1) for s in rule["all_of"]]
+        subs = [_compile(s, col, dtype, path, root, depth + 1, opts) for s in rule["all_of"]]
         checks.append((_G_ALL_OF, _and_all(subs)))
     if "any_of" in rule:
-        subs = [compile_rule(s, col, dtype, path, root, _depth + 1) for s in rule["any_of"]]
+        subs = [_compile(s, col, dtype, path, root, depth + 1, opts) for s in rule["any_of"]]
         pred = subs[0].valid
         for s in subs[1:]:
             pred = pred | s.valid
         checks.append((_G_ANY_OF, _check(col, pred, path, "any_of", "no anyOf branch matched")))
     if "one_of" in rule:
-        subs = [compile_rule(s, col, dtype, path, root, _depth + 1) for s in rule["one_of"]]
+        subs = [_compile(s, col, dtype, path, root, depth + 1, opts) for s in rule["one_of"]]
         total = subs[0].valid.cast("int")
         for s in subs[1:]:
             total = total + s.valid.cast("int")
@@ -467,10 +577,10 @@ def compile_rule(
                                          "exactly one oneOf branch must match")))
     if "if" in rule:
         # if/then/else (validator.ex:294-316)
-        cif = compile_rule(rule["if"], col, dtype, path, root, _depth + 1)
-        cthen = (compile_rule(rule["then"], col, dtype, path, root, _depth + 1)
+        cif = _compile(rule["if"], col, dtype, path, root, depth + 1, opts)
+        cthen = (_compile(rule["then"], col, dtype, path, root, depth + 1, opts)
                  if "then" in rule else Compiled(F.lit(True), _empty_viols()))
-        celse = (compile_rule(rule["else"], col, dtype, path, root, _depth + 1)
+        celse = (_compile(rule["else"], col, dtype, path, root, depth + 1, opts)
                  if "else" in rule else Compiled(F.lit(True), _empty_viols()))
         valid = F.when(cif.valid, cthen.valid).otherwise(celse.valid)
         viols = F.when(cif.valid, cthen.violations).otherwise(celse.violations)
@@ -482,7 +592,7 @@ def compile_rule(
     # CodegenFallback (interpreted), and CASE WHEN short-circuits per row, so
     # the (heavy) violation-building tree only ever runs for invalid rows —
     # measured 4x on the flagship corpus (~2% invalid).
-    body = _first_failing_group(checks) if _OPTS["early"] else out.violations
+    body = _first_failing_group(checks) if opts.early else out.violations
     viols = F.when(valid, _empty_viols()).otherwise(body)
     return Compiled(valid, viols)
 
@@ -492,7 +602,7 @@ def compile_rule(
 # ---------------------------------------------------------------------------
 
 def _compile_array(rule: Rule, col: Column, dtype: T.ArrayType, path: Column,
-                   root: Rule, depth: int) -> list[tuple[int, Compiled]]:
+                   root: Rule, depth: int, opts: CompileOptions) -> list[tuple[int, Compiled]]:
     checks: list[tuple[int, Compiled]] = []
     elem_dt = dtype.elementType
 
@@ -514,13 +624,13 @@ def _compile_array(rule: Rule, col: Column, dtype: T.ArrayType, path: Column,
     if isinstance(items, (dict, bool)) and items is not True:
         # single-schema form: every element valid (validator.ex:694-721)
         def elem_valid(x: Column) -> Column:
-            return compile_rule(items, x, elem_dt, path, root, depth + 1).valid
+            return _compile(items, x, elem_dt, path, root, depth + 1, opts).valid
 
         pred = F.forall(col, elem_valid)
 
         def elem_viols(x: Column, i: Column) -> Column:
             p = F.concat(path, F.lit("["), i.cast("string"), F.lit("]"))
-            return compile_rule(items, x, elem_dt, p, root, depth + 1).violations
+            return _compile(items, x, elem_dt, p, root, depth + 1, opts).violations
 
         viols = F.flatten(F.transform(col, elem_viols))
         ok = _guard(col, pred)
@@ -530,7 +640,7 @@ def _compile_array(rule: Rule, col: Column, dtype: T.ArrayType, path: Column,
         for i, sub in enumerate(items):
             elem = F.try_element_at(col, F.lit(i + 1))
             p = F.concat(path, F.lit(f"[{i}]"))
-            checks.append((_G_T4, compile_rule(sub, elem, elem_dt, p, root, depth + 1)))
+            checks.append((_G_T4, _compile(sub, elem, elem_dt, p, root, depth + 1, opts)))
         extra = rule.get("additional_items")
         k = len(items)
         if extra is False:
@@ -540,11 +650,11 @@ def _compile_array(rule: Rule, col: Column, dtype: T.ArrayType, path: Column,
             tail = _tail(col, k)
 
             def extra_valid(x: Column) -> Column:
-                return compile_rule(extra, x, elem_dt, path, root, depth + 1).valid
+                return _compile(extra, x, elem_dt, path, root, depth + 1, opts).valid
 
             def extra_viols(x: Column, i: Column) -> Column:
                 p = F.concat(path, F.lit("["), (i + k).cast("string"), F.lit("]"))
-                return compile_rule(extra, x, elem_dt, p, root, depth + 1).violations
+                return _compile(extra, x, elem_dt, p, root, depth + 1, opts).violations
 
             ok = _guard(col, F.forall(tail, extra_valid))
             viols = F.when(col.isNull(), _empty_viols()).otherwise(F.flatten(F.transform(tail, extra_viols)))
@@ -559,7 +669,7 @@ def _compile_array(rule: Rule, col: Column, dtype: T.ArrayType, path: Column,
         sub = rule["contains"]
 
         def any_valid(x: Column) -> Column:
-            return x.isNotNull() & compile_rule(sub, x, elem_dt, path, root, depth + 1).valid
+            return x.isNotNull() & _compile(sub, x, elem_dt, path, root, depth + 1, opts).valid
 
         checks.append((_G_T5, _check(col, F.exists(col, any_valid), path, "contains",
                                      "no array item matches contains schema")))
@@ -571,7 +681,7 @@ def _compile_array(rule: Rule, col: Column, dtype: T.ArrayType, path: Column,
 # ---------------------------------------------------------------------------
 
 def _compile_struct(rule: Rule, col: Column, dtype: T.StructType, path: Column,
-                    root: Rule, depth: int) -> list[tuple[int, Compiled]]:
+                    root: Rule, depth: int, opts: CompileOptions) -> list[tuple[int, Compiled]]:
     checks: list[tuple[int, Compiled]] = []
     fields = _struct_fields(dtype)
     props: dict[str, Rule] = rule.get("properties", {})
@@ -592,7 +702,7 @@ def _compile_struct(rule: Rule, col: Column, dtype: T.StructType, path: Column,
     for name, sub in props.items():
         if name in fields:
             p = F.concat(path, F.lit(_quote_path_seg(name)))
-            checks.append((_G_PROPS, compile_rule(sub, col.getField(name), fields[name], p, root, depth + 1)))
+            checks.append((_G_PROPS, _compile(sub, col.getField(name), fields[name], p, root, depth + 1, opts)))
         # property declared in rule but not in the physical schema: it can
         # never be present, so nothing to validate (absent => skip).
 
@@ -603,7 +713,7 @@ def _compile_struct(rule: Rule, col: Column, dtype: T.StructType, path: Column,
         for name, fdt in fields.items():
             if cre.search(name):
                 p = F.concat(path, F.lit(_quote_path_seg(name)))
-                checks.append((_G_PROPS, compile_rule(sub, col.getField(name), fdt, p, root, depth + 1)))
+                checks.append((_G_PROPS, _compile(sub, col.getField(name), fdt, p, root, depth + 1, opts)))
 
     # required (validator.ex:861-875)
     for name in rule.get("required", []):
@@ -650,8 +760,8 @@ def _compile_struct(rule: Rule, col: Column, dtype: T.StructType, path: Column,
                                                 "additional_properties",
                                                 f"additional property {name!r} not allowed")))
             else:
-                checks.append((_G_PROPS, compile_rule(extra_rule, col.getField(name), fields[name],
-                                                      p, root, depth + 1)))
+                checks.append((_G_PROPS, _compile(extra_rule, col.getField(name), fields[name],
+                                                      p, root, depth + 1, opts)))
 
     # dependencies (validator.ex:965-1004)
     for key, dep in rule.get("dependencies", {}).items():
@@ -663,7 +773,7 @@ def _compile_struct(rule: Rule, col: Column, dtype: T.StructType, path: Column,
             checks.append((_G_T5, _check(col, ~has_key | need, path, "dependencies",
                                          f"property {key!r} requires {dep!r}")))
         else:
-            sub = compile_rule(dep, col, dtype, path, root, depth + 1)
+            sub = _compile(dep, col, dtype, path, root, depth + 1, opts)
             checks.append((_G_T5, _check(col, ~has_key | sub.valid, path, "dependencies",
                                          f"schema dependency of {key!r} not satisfied")))
     return checks
@@ -674,7 +784,7 @@ def _compile_struct(rule: Rule, col: Column, dtype: T.StructType, path: Column,
 # ---------------------------------------------------------------------------
 
 def _compile_map(rule: Rule, col: Column, dtype: T.MapType, path: Column,
-                 root: Rule, depth: int) -> list[tuple[int, Compiled]]:
+                 root: Rule, depth: int, opts: CompileOptions) -> list[tuple[int, Compiled]]:
     checks: list[tuple[int, Compiled]] = []
     val_dt = dtype.valueType
     props: dict[str, Rule] = rule.get("properties", {})
@@ -682,7 +792,7 @@ def _compile_map(rule: Rule, col: Column, dtype: T.MapType, path: Column,
 
     for name, sub in props.items():
         p = F.concat(path, F.lit(_quote_path_seg(name)))
-        checks.append((_G_PROPS, compile_rule(sub, F.try_element_at(col, F.lit(name)), val_dt, p, root, depth + 1)))
+        checks.append((_G_PROPS, _compile(sub, F.try_element_at(col, F.lit(name)), val_dt, p, root, depth + 1, opts)))
 
     for name in rule.get("required", []):
         checks.append((_G_T3, _check(col, F.map_contains_key(col, F.lit(name)), path, "required",
@@ -701,7 +811,7 @@ def _compile_map(rule: Rule, col: Column, dtype: T.MapType, path: Column,
         # closure factory, NOT a default-arg lambda: pyspark derives the
         # lambda-variable count from the function arity, so a defaulted extra
         # parameter would receive a Column
-        return lambda x: compile_rule(sub_rule, x, val_dt, path, root, depth + 1).valid
+        return lambda x: _compile(sub_rule, x, val_dt, path, root, depth + 1, opts).valid
 
     for regex, sub in pattern_props.items():
         matched_vals = F.map_values(F.map_filter(col, lambda k, v: k.rlike(regex)))
@@ -713,7 +823,7 @@ def _compile_map(rule: Rule, col: Column, dtype: T.MapType, path: Column,
         name_rule = rule["property_names"]
 
         def nv(k: Column) -> Column:
-            return compile_rule(name_rule, k, T.StringType(), path, root, depth + 1).valid
+            return _compile(name_rule, k, T.StringType(), path, root, depth + 1, opts).valid
 
         checks.append((_G_T4, _check(col, F.forall(F.map_keys(col), nv), path, "property_names",
                                      "a property name is invalid")))
@@ -735,7 +845,7 @@ def _compile_map(rule: Rule, col: Column, dtype: T.MapType, path: Column,
                                             "additional properties not allowed")))
         else:
             def ev(x: Column) -> Column:
-                return compile_rule(extra_rule, x, val_dt, path, root, depth + 1).valid
+                return _compile(extra_rule, x, val_dt, path, root, depth + 1, opts).valid
 
             checks.append((_G_PROPS, _check(col, F.forall(F.map_values(extras), ev), path,
                                             "additional_properties", "an additional property is invalid")))
@@ -749,7 +859,7 @@ def _compile_map(rule: Rule, col: Column, dtype: T.MapType, path: Column,
             checks.append((_G_T5, _check(col, ~has_key | need, path, "dependencies",
                                          f"property {key!r} requires {dep!r}")))
         else:
-            sub = compile_rule(dep, col, dtype, path, root, depth + 1)
+            sub = _compile(dep, col, dtype, path, root, depth + 1, opts)
             checks.append((_G_T5, _check(col, ~has_key | sub.valid, path, "dependencies",
                                          f"schema dependency of {key!r} not satisfied")))
     return checks
@@ -775,7 +885,8 @@ def validate_df(
     (one row == one value in reference terms, validator.ex:51-66);
     target='c' validates just that column. mode='verdict' appends only the
     boolean (the reference's fail: :immediately analogue, behaviour.ex:86);
-    mode='violations' appends the violations array too.
+    mode='violations' appends the violations array too. The reference's
+    names are accepted as aliases; any other mode raises ValueError.
 
     Reference fail-mode mapping (behaviour.ex:36, validator.ex:121-169):
       :immediately -> 'verdict'     boolean only, no error detail
@@ -793,28 +904,17 @@ def validate_df(
 
         rule = inline_remote_refs(rule, registry)
     meta_validate(rule)
-    mode = {"immediately": "verdict", "finally": "violations"}.get(mode, mode)
-    if target is None:
-        col = F.struct(*[F.col(c) for c in df.columns])
-        dtype: T.DataType = T.StructType([T.StructField(f.name, f.dataType) for f in df.schema.fields])
-    else:
-        col = F.col(target)
-        dtype = df.schema[target].dataType
-    prev = dict(_OPTS)
-    _OPTS["exact_graphemes"] = exact_graphemes
     # :early is compiled in, not post-filtered: each node's violations become
     # a CASE chain over its with-chain steps (_first_failing_group), so
     # nested levels truncate themselves too — a flat keyword/group filter on
     # the final array cannot express that hierarchy (it either drops sibling
     # properties' errors of the same failing step or keeps later steps).
-    _OPTS["early"] = mode == "early"
-    try:
-        compiled = compile_rule(rule, col, dtype)
-    finally:
-        _OPTS.update(prev)
-    if mode == "verdict":
-        return df.withColumn(valid_col, compiled.valid)
-    return df.withColumn(valid_col, compiled.valid).withColumn(violations_col, compiled.violations)
+    early, with_violations = _fail_mode(mode)
+    dtype = df.schema if target is None else df.schema[target].dataType
+    compiled = compile_rule(rule, target, dtype,
+                            opts=CompileOptions(exact_graphemes=exact_graphemes, early=early))
+    out = df.withColumn(valid_col, compiled.valid)
+    return out.withColumn(violations_col, compiled.violations) if with_violations else out
 
 
 def validate_many(df: DataFrame, rules: dict[str, Rule],
@@ -822,18 +922,16 @@ def validate_many(df: DataFrame, rules: dict[str, Rule],
     """Validate one table against N rule documents in ONE projection — one
     scan produces valid_<name> (+ violations_<name>) per rule. The dataset-
     scope analogue of running N Xema.validate calls per value, fused so the
-    100TB input is read once."""
-    from pyspark.sql import types as T2
-
-    col = F.struct(*[F.col(c) for c in df.columns])
-    dtype = T2.StructType([T2.StructField(f.name, f.dataType) for f in df.schema.fields])
+    100TB input is read once. `mode` takes the same spellings as
+    validate_df."""
+    early, with_violations = _fail_mode(mode)
     out = df
     for name, rule in rules.items():
         nrule = normalize_rule(rule)
         meta_validate(nrule)
-        compiled = compile_rule(nrule, col, dtype)
+        compiled = compile_rule(nrule, None, df.schema, opts=CompileOptions(early=early))
         out = out.withColumn(f"valid_{name}", compiled.valid)
-        if mode == "violations":
+        if with_violations:
             out = out.withColumn(f"violations_{name}", compiled.violations)
     return out
 

@@ -375,7 +375,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     materializes the round (df.observe + localCheckpoint) instead of firing
     a separate per-round count action, so a k-round run launches k jobs,
     not 2k. localCheckpoint truncates the growing lineage so round N
-    doesn't replay rounds 1..N-1."""
+    doesn't replay rounds 1..N-1. Either variant raises RuntimeError when
+    max_iter rounds pass without reaching its fixed point."""
     if algorithm == "auto":
         fast = _driver_components(pairs, a_col, b_col, driver_bound)
         if fast is not None:
@@ -414,6 +415,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                   .localCheckpoint())
         if obs.get["changed"] == 0:
             break
+    else:
+        raise RuntimeError(f"label propagation did not converge in max_iter={max_iter} rounds")
     return labels.select(F.col("node").alias("doc"), F.col("lbl").alias("component"))
 
 
@@ -435,7 +438,9 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
     an unchanged checksum across a full round indicates a fixed point with
     overwhelming probability (a premature stop needs changed edges whose
     hash-delta sums cancel under BOTH seeds at equal count, ~2^-62 per
-    round — not a proof; the label variant's change-count is exact)."""
+    round — not a proof; the label variant's change-count is exact).
+    Raises RuntimeError when max_iter rounds end without an unchanged
+    checksum."""
     from pyspark.sql import Observation
 
     # ids keep their native type (string doc ids order lexicographically,
@@ -487,6 +492,8 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(f"large-star/small-star did not converge in max_iter={max_iter} rounds")
     # final edges point node -> component min; roots have no outgoing edge
     return (nodes.join(edges.withColumnRenamed("u", "node"), "node", "left")
             .select(F.col("node").alias("doc"),

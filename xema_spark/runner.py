@@ -211,11 +211,12 @@ def commit_lineage(spark: SparkSession, output_dir: str, run_id: str,
     rows, e.g. persisted) to aggregate from it instead of re-reading the
     verdict table — run_validation shares one cached read between the
     commit summary and the downstream consumers."""
-    verdict_dir = os.path.join(output_dir, "verdicts")
     try:
         if this_run is None:
-            this_run = spark.read.parquet(verdict_dir) \
-                .filter(F.col("run_id") == run_id)
+            # the run's own partition by direct path: listing it costs the
+            # same however many runs the store already holds
+            this_run = spark.read.parquet(
+                os.path.join(output_dir, "verdicts", f"run_id={run_id}"))
         summary_rows = _bucket_summary(this_run).collect()
     except AnalysisException as e:
         # zero-row run (empty corpus / empty micro-batch): the write left
@@ -282,10 +283,7 @@ def run_validation(
 
     done = _completed_buckets(spark, lineage_dir) if resume else set()
 
-    from pyspark.sql import types as T
-    dtype = T.StructType([T.StructField(f.name, f.dataType) for f in docs.schema.fields])
-    col = F.struct(*[F.col(c) for c in docs.columns])
-    compiled = compile_rule(rule, col, dtype)
+    compiled = compile_rule(rule, None, docs.schema)
 
     enriched = enrich_verdicts(docs, compiled, n_buckets)
     # COVERAGE of this run's bucket range, not a count: the lineage sidecar

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from xema_spark.compiler import compile_rule
+from xema_spark.compiler import CompileOptions, _fail_mode, compile_rule
 from xema_spark.rules import meta_validate, normalize_rule
 
 
@@ -22,17 +22,12 @@ def validate_stream(stream_df: DataFrame, rule: dict,
     """Apply a compiled rule to a streaming DataFrame (row == value, same as
     batch validate_df but without triggering analysis that needs a bounded
     plan)."""
-    from pyspark.sql import types as T
-
+    early, with_violations = _fail_mode(mode)
     rule = normalize_rule(rule)
     meta_validate(rule)
-    dtype = T.StructType([T.StructField(f.name, f.dataType) for f in stream_df.schema.fields])
-    col = F.struct(*[F.col(c) for c in stream_df.columns])
-    compiled = compile_rule(rule, col, dtype)
+    compiled = compile_rule(rule, None, stream_df.schema, opts=CompileOptions(early=early))
     out = stream_df.withColumn("valid", compiled.valid)
-    if mode == "violations":
-        out = out.withColumn("violations", compiled.violations)
-    return out
+    return out.withColumn("violations", compiled.violations) if with_violations else out
 
 
 def windowed_verdict_summary(stream_df: DataFrame, rule: dict, ts_col: str,
@@ -180,7 +175,6 @@ def commit_micro_batch(batch_df: DataFrame, batch_id: int, rule: dict,
     import uuid
 
     from pyspark.errors import AnalysisException
-    from pyspark.sql import types as T
 
     from xema_spark.runner import commit_lineage, enrich_verdicts, is_missing_path
 
@@ -251,10 +245,7 @@ def commit_micro_batch(batch_df: DataFrame, batch_id: int, rule: dict,
                             "NOT committed")
 
     run_id = f"{prefix}-{uuid.uuid4().hex[:6]}"
-    dtype = T.StructType([T.StructField(f.name, f.dataType)
-                          for f in batch_df.schema.fields])
-    col = F.struct(*[F.col(c) for c in batch_df.columns])
-    compiled = compile_rule(rule_n, col, dtype)
+    compiled = compile_rule(rule_n, None, batch_df.schema)
     t0 = time.time()
     (enrich_verdicts(batch_df, compiled, n_buckets)
      .withColumn("run_id", F.lit(run_id))
