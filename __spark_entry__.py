@@ -655,17 +655,19 @@ def _q_cast_custom(spark, sf_dir):
     return cast_df(base, rule).select("event_id", F.col("uid").alias("uid_int"))
 
 
+def _even_text_len(s):
+    """Validator for `v_custom_validator`: the text has an even length. One
+    module-level function, so every call of the query registers the same
+    object and its rule compiles once (the compile memo keys on it)."""
+    return s.str.len() % 2 == 0
+
+
 def _q_v_custom_validator(spark, sf_dir):
     """Custom validator hook (#35 parity, validator.ex:1020-1041): registered
     vectorized predicate composed into the rule tree as its own keyword."""
-    import pandas as pd
-
     from xema_spark.rules import register_validator
 
-    def even_text_len(s: "pd.Series") -> "pd.Series":
-        return s.str.len() % 2 == 0
-
-    register_validator("even_text_len", even_text_len)
+    register_validator("even_text_len", _even_text_len)
     rule = {"type": "object",
             "properties": {"text": {"type": "string", "validator": "even_text_len"}}}
     d = validate_df(_docs(spark, sf_dir, "doc_id", "text"), rule)

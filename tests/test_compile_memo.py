@@ -141,3 +141,15 @@ def test_memo_is_bounded():
     for n in range(compiler._MEMO_SIZE + 5):
         compile_rule({"maximum": n}, "v", T.LongType())
     assert len(compiler._memo) == compiler._MEMO_SIZE
+
+
+def test_custom_validator_query_hits_the_memo(spark, sf_dir):
+    """The `v_custom_validator` query registers one module-level validator,
+    so a repeat call reuses its compiled rule instead of adding an entry."""
+    import __spark_entry__ as entry
+
+    query = entry.queries()["v_custom_validator"]
+    query(spark, sf_dir)
+    size = len(compiler._memo)
+    query(spark, sf_dir)
+    assert len(compiler._memo) == size

@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xema_spark.datagen import FLAGSHIP_RULE, gen_documents
-from xema_spark.streaming import stream_to_verdict_tables, validate_stream, windowed_verdict_summary
+from xema_spark.compiler import validate_df
+from xema_spark.streaming import stream_to_verdict_tables, windowed_verdict_summary
 
 N = 600
 
@@ -18,7 +19,7 @@ def test_stream_validation_matches_batch(spark, tmp_path):
     schema = spark.read.parquet(src).schema
 
     stream = spark.readStream.schema(schema).parquet(src)
-    v = validate_stream(stream.select("doc_id", "spans", "expected_valid"), FLAGSHIP_RULE)
+    v = validate_df(stream.select("doc_id", "spans", "expected_valid"), FLAGSHIP_RULE)
     q = (v.writeStream.format("memory").queryName("verdicts_mem")
          .trigger(availableNow=True).start())
     q.awaitTermination(120)

@@ -23,8 +23,8 @@ Fail modes (behaviour.ex:36, validator.ex:121-169): the reference's
 `:immediately` maps to verdict-only evaluation (select just `valid`; Catalyst
 column-pruning drops every violation expression), `:finally` maps to
 selecting `violations` too, and `:early` is compiled into each node's
-violations. validate_df, validate_many and streaming.validate_stream read
-the same mode map (`_FAIL_MODES`).
+violations. validate_df (on batch and streaming frames alike) and
+validate_many read the same mode map (`_FAIL_MODES`).
 
 Compile once per (rule, schema, options). A compile is thousands of py4j
 round trips, so `compile_rule` memoizes its top-level call when the input is

@@ -1229,15 +1229,10 @@ def compact_signature_store(spark, store_dir: str, watermark: int) -> dict:
     away would make the replay re-append). Batches >= watermark are left
     untouched. Successive compactions fold prior negative partitions in
     (-w_old < watermark) and delete them."""
-    from pyspark.errors import AnalysisException
+    from xema_spark.runner import _read_written
 
-    from xema_spark.runner import is_missing_path
-
-    try:
-        store = spark.read.parquet(store_dir)
-    except AnalysisException as e:
-        if not is_missing_path(e):
-            raise
+    store = _read_written(spark, store_dir)
+    if store is None:
         return {"compacted_partitions": 0, "rows": 0, "docs": 0}
     src = store.filter(F.col("ingest_batch") < watermark)
     data_cols = [c for c in store.columns if c != "ingest_batch"]

@@ -27,6 +27,27 @@ analogue — its only I/O is a schema fetch,
 /root/reference/lib/xema/loader.ex:9-15 — this operator exists for the
 10^12-doc shape).
 
+One commit core serves the batch runner and the streaming foreachBatch
+sink (streaming.commit_micro_batch):
+
+- `_write_verdicts` is the only verdict write: compile the rule, project
+  the verdict rows, stamp run_id, repartition on bucket and append under
+  verdicts/ partitioned by (run_id, bucket);
+- `_read_run` is the only read of one run's rows: its verdicts/run_id=<id>
+  partition by direct path, whatever else the store holds;
+- the lineage append (`_append_lineage_rows`) is the commit, and
+  `_read_written` is the only read of a sidecar that may not exist yet.
+
+The two callers differ only in how they commit: the batch folds its commit
+summary into one action with the uniqueness and referential probes, the
+stream commits through `commit_lineage`.
+
+Filesystem rule: a path is local when its URI scheme — or, for a path with
+no scheme, the scheme of fs.defaultFS — is `file`. Only then do driver-side
+writes (the pyarrow lineage commit, the metrics file) touch the driver's
+own disk; every other path goes through Spark or the Hadoop FileSystem API,
+so a commit lands on the same filesystem as the verdicts it publishes.
+
 Skew: hot doc_ids don't exist (ids are unique-ish) but hot media_refs do;
 the referential check broadcasts the asset dimension (no shuffle of the big
 side) or salts the dim when it's too big to broadcast (stats.py).
@@ -59,18 +80,10 @@ class DriftGateError(RuntimeError):
     orchestrator halts, the forensic record stays."""
 
 
-#: AnalysisException markers for "this parquet path was never written".
-#: Shared by every sidecar read that must distinguish FIRST-RUN-EMPTY (fine)
-#: from a transient read failure (must raise): treating an IO timeout as
-#: "nothing committed yet" would re-commit work and double-count rows in
-#: read_verdicts, the exact failure commit protocols exist to prevent.
+#: AnalysisException markers for "this parquet path was never written"
+#: (see _read_written).
 MISSING_PATH_MARKERS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA",
                         "Path does not exist")
-
-
-def is_missing_path(e: AnalysisException) -> bool:
-    msg = str(e)
-    return any(m in msg for m in MISSING_PATH_MARKERS)
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
@@ -80,18 +93,69 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def _completed_buckets(spark: SparkSession, lineage_dir: str) -> set[int]:
+def _read_written(spark: SparkSession, path: str) -> DataFrame | None:
+    """`path` read as parquet, or None when nothing was ever written there:
+    the path does not exist, or it is a directory with no data files (an
+    empty write leaves only _SUCCESS). The only read of a sidecar or store
+    that may not exist yet. Checking existence first keeps the common
+    first-run case off Spark's failing-read path. Any other failure raises:
+    a transient read error taken for "nothing committed yet" would
+    re-commit work and double-count rows in read_verdicts, the exact
+    failure commit protocols exist to prevent."""
+    if not _path_exists(spark, path):
+        return None
     try:
-        rows = spark.read.parquet(lineage_dir).select("bucket").distinct().collect()
-        return {r["bucket"] for r in rows}
+        return spark.read.parquet(path)
     except AnalysisException as e:
-        # no lineage yet = first run, nothing resumed. Any OTHER failure
-        # must raise: an empty `done` on a transient error would re-scan and
-        # re-commit every already-committed bucket under a new run_id, and
-        # read_verdicts would then see every doc twice
-        if is_missing_path(e):
-            return set()
+        if any(m in str(e) for m in MISSING_PATH_MARKERS):
+            return None
         raise
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """`path` on the driver's own filesystem, or None when it names another
+    one. The scheme comes from the path's URI, or else from fs.defaultFS;
+    the FileSystem itself is never instantiated (for hdfs:// that would
+    contact the NameNode)."""
+    jvm = spark._jvm
+    uri = jvm.org.apache.hadoop.fs.Path(path).toUri()
+    scheme = uri.getScheme() or jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+        spark._jsc.hadoopConfiguration()).getScheme()
+    return uri.getPath() if scheme == "file" else None
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write `text` to `path` through a temporary file and a rename, so a
+    reader sees either no file or the whole of it. A local path uses
+    os.replace; any other goes through the Hadoop FileSystem, whose rename
+    does not overwrite, so an existing file is deleted first."""
+    local = _local_path(spark, path)
+    if local is not None:
+        with open(local + ".tmp", "w") as f:
+            f.write(text)
+        os.replace(local + ".tmp", local)
+        return
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    dst, tmp = hpath(path), hpath(path + ".tmp")
+    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+    fs.delete(dst, False)
+    if not fs.rename(tmp, dst):
+        raise OSError(f"could not rename {path}.tmp to {path}")
+
+
+def _completed_buckets(spark: SparkSession, lineage_dir: str) -> set[int]:
+    """Buckets with a lineage row; empty when no lineage was ever written
+    (first run). An unreadable lineage raises rather than reading as empty,
+    which would re-scan and re-commit every committed bucket."""
+    lin = _read_written(spark, lineage_dir)
+    if lin is None:
+        return set()
+    return {int(r["bucket"]) for r in lin.select("bucket").distinct().collect()}
 
 
 def read_verdicts(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -143,6 +207,40 @@ def enrich_verdicts(docs: DataFrame, compiled, n_buckets: int) -> DataFrame:
     )
 
 
+def _write_verdicts(docs: DataFrame, rule: dict, output_dir: str, run_id: str,
+                    n_buckets: int, n_parts: int,
+                    skip_buckets: set[int] = frozenset()) -> float:
+    """THE verdict write of both entry points: compile the (normalized) rule,
+    project the compact verdict rows, drop `skip_buckets` (a resumed batch's
+    committed buckets), stamp `run_id` and append one file per bucket under
+    verdicts/run_id=<id>/bucket=<b>/. The repartition on the doc_id-hash
+    bucket happens AFTER the projection dropped the heavy spans column, so
+    the shuffle moves only the compact rows. `n_parts` is the write's task
+    count: each bucket still hashes to exactly one task, so the layout is
+    the same for any value. Returns the write's wall seconds."""
+    enriched = enrich_verdicts(docs, compile_rule(rule, None, docs.schema),
+                               n_buckets)
+    if skip_buckets:
+        enriched = enriched.filter(~F.col("bucket").isin(*sorted(skip_buckets)))
+    t0 = time.time()
+    (enriched.withColumn("run_id", F.lit(run_id))
+     .repartition(n_parts, "bucket")
+     .write.mode("append").partitionBy("run_id", "bucket")
+     .parquet(os.path.join(output_dir, "verdicts")))
+    return time.time() - t0
+
+
+def _read_run(spark: SparkSession, output_dir: str, run_id: str) -> DataFrame | None:
+    """One run's verdict rows, read from its verdicts/run_id=<id> partition
+    by direct path: listing it costs the same however many runs the store
+    holds. `bucket` is the partition column below that path; `run_id` is
+    set from the argument (partition inference would read a numeric id as
+    a number). None when the run wrote no rows."""
+    run = _read_written(spark, os.path.join(output_dir, "verdicts",
+                                            f"run_id={run_id}"))
+    return None if run is None else run.withColumn("run_id", F.lit(run_id))
+
+
 def _bucket_summary(this_run: DataFrame) -> DataFrame:
     """Per-bucket summary aggregate of one run's verdict rows — shared by
     commit_lineage and run_validation's fused summary+probe action."""
@@ -158,31 +256,32 @@ def _append_lineage_rows(spark: SparkSession, output_dir: str, run_id: str,
                          scan_elapsed: float, summary_rows: list) -> None:
     """Append the (<= n_buckets) summary rows to the lineage sidecar — the
     COMMIT that makes this run's (run_id, bucket) pairs visible. The rows
-    are already on the driver, so this writes ONE parquet file driver-side
-    (pyarrow) instead of scheduling a Spark job for a kilobyte of metadata
-    — a commit log is driver-side work by nature (guide §5: the driver
-    should do almost no DATA work; this is not data work). Falls back to a
-    Spark write for non-local output dirs (s3://... paths)."""
+    are already on the driver, so on a local filesystem this writes ONE
+    parquet file driver-side (pyarrow) instead of scheduling a Spark job for
+    a kilobyte of metadata (guide §5: the driver should do almost no DATA
+    work; this is not data work). Any other filesystem gets a Spark write,
+    so the commit lands where the verdicts are."""
     lineage_dir = os.path.join(output_dir, "lineage")
     rows = [{"bucket": int(r["bucket"]), "n_rows": int(r["n_rows"]),
              "n_valid": int(r["n_valid"]),
              "n_violations": int(r["n_violations"]),
              "n_bytes": int(r["n_bytes"]), "run_id": run_id,
              "scan_elapsed_sec": float(scan_elapsed)} for r in summary_rows]
-    if "://" not in output_dir:
+    local_dir = _local_path(spark, lineage_dir)
+    if local_dir is not None:
         import uuid as _uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        os.makedirs(lineage_dir, exist_ok=True)
+        os.makedirs(local_dir, exist_ok=True)
         table = pa.Table.from_pylist(rows, schema=pa.schema([
             ("bucket", pa.int32()), ("n_rows", pa.int64()),
             ("n_valid", pa.int64()), ("n_violations", pa.int64()),
             ("n_bytes", pa.int64()), ("run_id", pa.string()),
             ("scan_elapsed_sec", pa.float64())]))
-        tmp = os.path.join(lineage_dir, f".part-{_uuid.uuid4().hex}.tmp")
-        final = os.path.join(lineage_dir,
+        tmp = os.path.join(local_dir, f".part-{_uuid.uuid4().hex}.tmp")
+        final = os.path.join(local_dir,
                              f"part-{_uuid.uuid4().hex}.snappy.parquet")
         pq.write_table(table, tmp, compression="snappy")
         os.rename(tmp, final)  # atomic on a local filesystem
@@ -208,29 +307,28 @@ def commit_lineage(spark: SparkSession, output_dir: str, run_id: str,
     (run_id, bucket) pairs visible to read_verdicts. Returns the summary
     rows (<= n_buckets of them) so callers can derive totals without a
     read-back job. Pass `this_run` (a frame already scoped to this run's
-    rows, e.g. persisted) to aggregate from it instead of re-reading the
-    verdict table — run_validation shares one cached read between the
-    commit summary and the downstream consumers."""
-    try:
+    rows, e.g. persisted) to aggregate from it instead of reading the run's
+    partition. A run that wrote no rows (empty corpus or micro-batch) has
+    nothing a consumer could see: it commits nothing and returns []."""
+    if this_run is None:
+        this_run = _read_run(spark, output_dir, run_id)
         if this_run is None:
-            # the run's own partition by direct path: listing it costs the
-            # same however many runs the store already holds
-            this_run = spark.read.parquet(
-                os.path.join(output_dir, "verdicts", f"run_id={run_id}"))
-        summary_rows = _bucket_summary(this_run).collect()
-    except AnalysisException as e:
-        # zero-row run (empty corpus / empty micro-batch): the write left
-        # only _SUCCESS (or nothing), there is nothing to commit and nothing
-        # a consumer could see — an empty lineage is the correct record.
-        # ONLY the missing-path / unreadable-empty-dir cases are swallowed;
-        # any other read failure after a non-empty write must fail loudly,
-        # or the written verdicts would be permanently orphaned (ADVICE r3)
-        if is_missing_path(e):
             return []
-        raise
+    summary_rows = _bucket_summary(this_run).collect()
     _append_lineage_rows(spark, output_dir, run_id, scan_elapsed,
                          summary_rows)
     return summary_rows
+
+
+def _check_drift_args(fail_on_drift: bool, profile_cols, drift_baseline_run) -> None:
+    """Fail CLOSED at call time: without profile_cols and a baseline run the
+    gate could never fire, and fail_on_drift would be a silent no-op — the
+    operator believes the pipeline is protected when nothing is checked."""
+    if fail_on_drift and not (profile_cols and drift_baseline_run):
+        raise ValueError(
+            "fail_on_drift=True requires both profile_cols and "
+            "drift_baseline_run — without them the drift gate never "
+            "evaluates and the flag would silently protect nothing")
 
 
 def run_validation(
@@ -261,19 +359,11 @@ def run_validation(
     all persisted (an orchestrator halts the pipeline but keeps the full
     forensic record; the streaming sink's gate, by contrast, blocks the
     batch's commit itself — see streaming.commit_micro_batch)."""
-    if fail_on_drift and not (profile_cols and drift_baseline_run):
-        # fail CLOSED at call time: without these the gate could never fire
-        # and fail_on_drift would be a silent no-op — the operator believes
-        # the pipeline is protected when nothing is checked
-        raise ValueError(
-            "fail_on_drift=True requires both profile_cols and "
-            "drift_baseline_run — without them the drift gate never "
-            "evaluates and the flag would silently protect nothing")
+    _check_drift_args(fail_on_drift, profile_cols, drift_baseline_run)
     rule = normalize_rule(rule)
     meta_validate(rule)
     import uuid
 
-    verdict_dir = os.path.join(output_dir, "verdicts")
     violation_dir = os.path.join(output_dir, "violations")
     lineage_dir = os.path.join(output_dir, "lineage")  # doubles as per-bucket summary
     # unique per attempt: two attempts in the same second must not share a
@@ -282,61 +372,22 @@ def run_validation(
     run_id = run_id or f"{time.strftime('%Y%m%dT%H%M%S')}-{uuid.uuid4().hex[:6]}"
 
     done = _completed_buckets(spark, lineage_dir) if resume else set()
-
-    compiled = compile_rule(rule, None, docs.schema)
-
-    enriched = enrich_verdicts(docs, compiled, n_buckets)
     # COVERAGE of this run's bucket range, not a count: the lineage sidecar
     # is run- and config-agnostic, so a directory holding buckets {4..9}
     # from a 16-bucket writer must NOT convince an n_buckets=4 run that its
     # own buckets 0-3 are done (len(done) >= n_buckets would)
-    done = {int(b) for b in done}
     fully_resumed = set(range(n_buckets)) <= done
-    if done and not fully_resumed:
-        enriched = enriched.filter(~F.col("bucket").isin(*sorted(done)))
 
-    t0 = time.time()
-    # THE single pass over the input: everything else reads this compact
-    # table. The explicit repartition on the doc_id-hash bucket (north_star)
-    # happens AFTER the projection dropped the heavy spans column, so the
-    # shuffle moves only (doc_id, verdict, violations, refs) — and the write
-    # emits one file per bucket instead of n_input_partitions x n_buckets.
-    # df.observe collects this run's global counters DURING the write action
-    # (zero extra scans — the Spark-native single-pass metric channel).
-    from pyspark.sql import Observation
-
-    if fully_resumed:
-        # every bucket already has a lineage row (this run's or another
-        # writer's — streaming and batch share the sidecar): there is no
-        # input left to scan, so skip the pass entirely instead of running
-        # a zero-task write whose Observation would never fire (obs.get
-        # asserts on an unmaterialized observation)
-        scan_elapsed, scan_obs, summary_rows = 0.0, {}, []
-        commit_elapsed = 0.0
-        this_run = None
-        has_prior = True
-    else:
-        obs = Observation(f"xema_scan_{run_id}")
-        (enriched.observe(obs,
-                          F.count(F.lit(1)).alias("rows"),
-                          F.sum(F.col("valid").cast("long")).alias("valid"),
-                          F.sum(F.size("violations").cast("long")).alias("violations"))
-         .withColumn("run_id", F.lit(run_id))
-         # 4x partitions for n_buckets distinct keys: hashing k keys into
-         # exactly k partitions leaves ~e^-1 of them empty and the hottest
-         # task carrying 3-4 buckets (measured maxload 4 at 64->64 vs 2 at
-         # 64->256) — the write stage tail is the straggler (guide §2.5,
-         # too few distinct values per partition). Each bucket still hashes
-         # to exactly ONE task, so the one-file-per-bucket layout and the
-         # resume contract are unchanged; empty tasks are free.
-         .repartition(4 * n_buckets, "bucket")
-         .write.mode("append").partitionBy("run_id", "bucket").parquet(verdict_dir))
-        scan_elapsed = time.time() - t0
-        scan_obs = obs.get
-        # does any OTHER run's commit exist? One FS RPC — when it doesn't
-        # (the common fresh-output case), the committed-view re-read, its
-        # lineage broadcast and the union are skipped outright below
-        has_prior = bool(done) or _path_exists(spark, lineage_dir)
+    # THE single pass over the input: everything else reads the compact
+    # verdict table it writes. 4x write partitions for n_buckets distinct
+    # keys: hashing k keys into exactly k partitions leaves ~e^-1 of them
+    # empty and the hottest task carrying 3-4 buckets (measured maxload 4
+    # at 64->64 vs 2 at 64->256) — the write stage tail is the straggler
+    # (guide §2.5). A fully resumed run (every bucket already has a lineage
+    # row, this run's or another writer's — streaming and batch share the
+    # sidecar) has no input left to scan and skips the pass.
+    scan_elapsed = 0.0 if fully_resumed else _write_verdicts(
+        docs, rule, output_dir, run_id, n_buckets, 4 * n_buckets, done)
 
     # Everything below reads the COMMITTED view (prior runs + this run's
     # just-written partition — consuming own rows pre-commit is safe: if
@@ -344,11 +395,16 @@ def run_validation(
     # published). Cache the compact table once — it is ~1% of input size
     # by construction, exactly the table a production job keeps hot.
     t1 = time.time()
-    if fully_resumed:
+    this_run = None if fully_resumed else _read_run(spark, output_dir, run_id)
+    if this_run is None:
+        # nothing scanned (fully resumed, or an empty input): the committed
+        # view is all there is, and this run has nothing to commit
         cached = [verdicts := read_verdicts(spark, output_dir).persist()]
-    elif has_prior:
-        this_run = (spark.read.parquet(verdict_dir)
-                    .filter(F.col("run_id") == run_id).persist())
+    # does any OTHER run's commit exist? One FS RPC — when it doesn't (the
+    # common fresh-output case), the committed-view re-read, its lineage
+    # broadcast and the union are skipped outright
+    elif done or _path_exists(spark, lineage_dir):
+        this_run = this_run.persist()
         # persist the UNION too: both consumers (violations write + fused
         # probe) scan it, and without this the prior runs' half re-reads
         # parquet and re-runs the lineage semi-join per consumer
@@ -357,8 +413,7 @@ def run_validation(
             .filter(F.col("run_id") != run_id)).persist()
         cached = [this_run, verdicts]
     else:
-        this_run = verdicts = (spark.read.parquet(verdict_dir)
-                               .filter(F.col("run_id") == run_id).persist())
+        this_run = verdicts = this_run.persist()
         cached = [this_run]
 
     # ONE action computes the per-bucket commit summary AND the uniqueness
@@ -368,10 +423,12 @@ def run_validation(
     # identical at every parallelism level; at bench scale that constant
     # pollutes the N->4N end-to-end scaling figure (BENCH/BASELINE.md e2e
     # gate) — fewer actions = less level-independent constant (guide §1.2).
-    # The commit (lineage append) happens right after, driver-side; the
-    # crash window is unchanged (uncommitted verdict files stay invisible).
+    # The commit (lineage append) happens right after, driver-side, so the
+    # crash window between the verdict write and the commit spans this one
+    # action: the summary and both probe jobs. Uncommitted verdict files
+    # stay invisible and a resumed run re-scans their buckets.
     parts = []
-    if this_run is not None and not fully_resumed:
+    if this_run is not None:
         parts.append(_bucket_summary(this_run).select(
             F.lit("bucket").alias("metric"),
             F.col("bucket").cast("long").alias("a"),
@@ -407,7 +464,8 @@ def run_validation(
                     for r in fused_rows if r["metric"] == "bucket"]
     probe_rows = {r["metric"]: r for r in fused_rows
                   if r["metric"] != "bucket"}
-    if not fully_resumed:
+    commit_elapsed = 0.0
+    if this_run is not None:
         _append_lineage_rows(spark, output_dir, run_id, scan_elapsed,
                              summary_rows)
         commit_elapsed = time.time() - t1
@@ -420,6 +478,10 @@ def run_validation(
     viols.write.mode("overwrite").parquet(violation_dir)
     violations_elapsed = time.time() - t1
 
+    # this run's scan totals are the sums of its own commit summary rows
+    scan_rows = sum(r["n_rows"] for r in summary_rows)
+    scan_valid = sum(r["n_valid"] for r in summary_rows)
+    scan_viol = sum(r["n_violations"] for r in summary_rows)
     metrics: dict = {
         "run_id": run_id,
         "n_buckets": n_buckets,
@@ -428,17 +490,15 @@ def run_validation(
         # the sidecar) never gated this run's scan and must not inflate it
         "resumed_buckets": len(done & set(range(n_buckets))),
         "scan_elapsed_sec": scan_elapsed,
-        "scan_rows": scan_obs.get("rows", 0),
-        "scan_valid": scan_obs.get("valid", 0),
-        "scan_violations": scan_obs.get("violations", 0),
+        "scan_rows": scan_rows,
+        "scan_valid": scan_valid,
+        "scan_violations": scan_viol,
     }
 
-    n_rows = sum(r["n_rows"] for r in summary_rows)
-    n_valid = sum(r["n_valid"] for r in summary_rows)
-    n_viol = sum(r["n_violations"] for r in summary_rows)
+    n_rows, n_valid, n_viol = scan_rows, scan_valid, scan_viol
     if done:  # totals include previously-completed buckets from the sidecar
         prior_lineage = spark.read.parquet(lineage_dir)
-        if not fully_resumed:
+        if this_run is not None:
             # rows this attempt just committed are already in summary_rows
             prior_lineage = prior_lineage.filter(F.col("run_id") != run_id)
         prior = (prior_lineage
@@ -453,34 +513,27 @@ def run_validation(
                    duplicate_rows=int(dup["c"] or 0))
     if assets is not None:
         metrics["dangling_refs"] = probe_rows["referential"]["b"]
-    # the probes ride the fused commit action since r6 — their cost is
-    # inside commit_elapsed_sec (phase attribution note: BENCH/BASELINE.md)
-    metrics["probe_elapsed_sec"] = 0.0
+    # the probes ride the fused commit action: their cost is inside
+    # commit_elapsed_sec (phase attribution note: BENCH/BASELINE.md)
     metrics["commit_elapsed_sec"] = round(commit_elapsed, 3)
     metrics["violations_elapsed_sec"] = round(violations_elapsed, 3)
 
+    drifted: list = []
     if profile_cols:
         from xema_spark import stats as _stats
 
-        prof = _stats.stats_profile(docs, profile_cols).localCheckpoint()
-        _stats.write_stats_sidecar(prof, output_dir, run_id)
+        drifted = _stats.profile_and_score(
+            docs, profile_cols, output_dir, run_id, drift_baseline_run,
+            exclude_metrics=drift_exclude_metrics)
         if drift_baseline_run is not None:
-            base = _stats.read_baseline_profile(spark, output_dir,
-                                                drift_baseline_run,
-                                                profile_cols)
-            report = _stats.score_against_baseline(
-                prof, base, drift_baseline_run, output_dir, run_id,
-                exclude_metrics=drift_exclude_metrics)
-            metrics["drifted_metrics"] = report.filter("drifted").count()
+            metrics["drifted_metrics"] = len(drifted)
             metrics["drift_baseline_run"] = drift_baseline_run
 
     for c in cached:
         c.unpersist()
-    with open(os.path.join(output_dir, f"metrics_{run_id}.json"), "w") as f:
-        json.dump(metrics, f, indent=2)
-    if fail_on_drift and metrics.get("drifted_metrics", 0) > 0:
-        drifted = [(r["column"], r["metric"])
-                   for r in report.filter("drifted").collect()]
+    _write_text(spark, os.path.join(output_dir, f"metrics_{run_id}.json"),
+                json.dumps(metrics, indent=2))
+    if fail_on_drift and drifted:
         raise DriftGateError(
             f"run {run_id} drifted vs baseline {drift_baseline_run!r} on "
             f"{drifted}; verdicts, profile, and drift report are persisted "

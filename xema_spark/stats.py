@@ -290,28 +290,42 @@ def read_baseline_profile(spark, output_dir: str, run_id: str,
     return base
 
 
-def score_against_baseline(profile: DataFrame, baseline: DataFrame,
-                           baseline_run: str, output_dir: str,
-                           sidecar_run_id: str,
-                           exclude_metrics: tuple[str, ...] = ()) -> DataFrame:
-    """Shared tail of the batch and streaming drift gates: score a run's
-    profile against a baseline profile, persist the per-(column, metric)
-    verdict rows under `<output_dir>/drift/run_id=<sidecar_run_id>` (direct
-    partition overwrite ⇒ retry/replay-idempotent, mirroring the stats
-    sidecar), and return the locally-checkpointed report so callers collect
-    the verdicts exactly once. exclude_metrics drops whole metric families
-    from BOTH the persisted report and the gate (see
-    SCALE_DEPENDENT_METRICS for why streaming excludes size-based ones)."""
+def profile_and_score(df: DataFrame, cols: list[str], output_dir: str,
+                      run_id: str, baseline_run: str | None = None,
+                      exclude_metrics: tuple[str, ...] = (),
+                      skip_empty: bool = False) -> list[tuple[str, str]] | None:
+    """The profile and drift steps shared by the batch and streaming gates:
+    profile `df` (one agg pass), write it as `run_id`'s stats sidecar and,
+    with `baseline_run`, score it against that run's profile. The verdict
+    rows go to `<output_dir>/drift/run_id=<run_id>` (a direct partition
+    overwrite, so a retry or replay rewrites its own rows). Returns the
+    drifted (column, metric) pairs, collected once ([] without a baseline).
+
+    The baseline is read before anything is written and fails closed
+    (read_baseline_profile). exclude_metrics drops whole metric families
+    from both the persisted report and the result (see
+    SCALE_DEPENDENT_METRICS). skip_empty: a `df` with no rows writes
+    nothing and returns None — an empty micro-batch carries no data
+    signal, and scoring it would read every distribution as collapsed."""
     import os
 
-    report = drift_report(profile, baseline)
+    prof = stats_profile(df, cols).localCheckpoint()
+    base = (None if baseline_run is None else
+            read_baseline_profile(df.sparkSession, output_dir, baseline_run, cols))
+    if skip_empty and prof.head()["n_rows"] == 0:
+        return None
+    write_stats_sidecar(prof, output_dir, run_id)
+    if base is None:
+        return []
+    report = drift_report(prof, base)
     if exclude_metrics:
         report = report.filter(~F.col("metric").isin(*exclude_metrics))
     report = (report.withColumn("baseline_run", F.lit(baseline_run))
               .localCheckpoint())
     report.write.mode("overwrite").parquet(
-        os.path.join(output_dir, "drift", f"run_id={sidecar_run_id}"))
-    return report
+        os.path.join(output_dir, "drift", f"run_id={run_id}"))
+    return [(r["column"], r["metric"])
+            for r in report.filter("drifted").select("column", "metric").collect()]
 
 
 def drift_report(current: DataFrame, baseline: DataFrame,

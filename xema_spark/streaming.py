@@ -13,21 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from xema_spark.compiler import CompileOptions, _fail_mode, compile_rule
+from xema_spark import runner
+from xema_spark.compiler import validate_df
 from xema_spark.rules import meta_validate, normalize_rule
-
-
-def validate_stream(stream_df: DataFrame, rule: dict,
-                    mode: str = "violations") -> DataFrame:
-    """Apply a compiled rule to a streaming DataFrame (row == value, same as
-    batch validate_df but without triggering analysis that needs a bounded
-    plan)."""
-    early, with_violations = _fail_mode(mode)
-    rule = normalize_rule(rule)
-    meta_validate(rule)
-    compiled = compile_rule(rule, None, stream_df.schema, opts=CompileOptions(early=early))
-    out = stream_df.withColumn("valid", compiled.valid)
-    return out.withColumn("violations", compiled.violations) if with_violations else out
 
 
 def windowed_verdict_summary(stream_df: DataFrame, rule: dict, ts_col: str,
@@ -35,7 +23,7 @@ def windowed_verdict_summary(stream_df: DataFrame, rule: dict, ts_col: str,
                              watermark: str = "2 minutes") -> DataFrame:
     """Per event-time window pass/fail counts with late-data watermark —
     the streaming analogue of stats.per_partition_summary."""
-    v = validate_stream(stream_df, rule, mode="violations")
+    v = validate_df(stream_df, rule, mode="violations")
     return (v.withWatermark(ts_col, watermark)
             .groupBy(F.window(F.col(ts_col), window).alias("w"))
             .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -61,7 +49,7 @@ def stateful_key_verdicts(stream_df: DataFrame, rule: dict,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    v = validate_stream(stream_df, rule, mode="verdict") \
+    v = validate_df(stream_df, rule, mode="verdict") \
         .select(F.col(key_col).cast("string").alias("key"), "valid")
 
     def update(key, pdfs, state: GroupState):
@@ -132,11 +120,7 @@ def stream_to_verdict_tables(stream_df: DataFrame, rule: dict, output_dir: str,
     Returns the configured DataStreamWriter — the caller picks the trigger
     and calls .start() (e.g. `.trigger(availableNow=True).start()`), which
     keeps trigger policy out of the library."""
-    if fail_on_drift and not (profile_cols and drift_baseline_run):
-        raise ValueError(
-            "fail_on_drift=True requires both profile_cols and "
-            "drift_baseline_run — without them the drift gate never "
-            "evaluates and the flag would silently protect nothing")
+    runner._check_drift_args(fail_on_drift, profile_cols, drift_baseline_run)
     rule_n = normalize_rule(rule)
     meta_validate(rule_n)
 
@@ -171,88 +155,43 @@ def commit_micro_batch(batch_df: DataFrame, batch_id: int, rule: dict,
     never commits. Missing/partial baseline fails closed (ValueError), same
     as the batch runner."""
     import os
-    import time
     import uuid
 
-    from pyspark.errors import AnalysisException
-
-    from xema_spark.runner import commit_lineage, enrich_verdicts, is_missing_path
-
-    if fail_on_drift and not (profile_cols and drift_baseline_run):
-        # hoisted ABOVE the profile block: a direct call with
-        # fail_on_drift=True and no profile_cols would otherwise skip the
-        # whole gate and commit unprotected — the silent no-op this guard
-        # exists to prevent
-        raise ValueError(
-            "fail_on_drift=True requires both profile_cols and "
-            "drift_baseline_run — without them the drift gate never "
-            "evaluates and the flag would silently protect nothing")
+    # checked ABOVE the profile block: a direct call with fail_on_drift=True
+    # and no profile_cols would otherwise skip the whole gate
+    runner._check_drift_args(fail_on_drift, profile_cols, drift_baseline_run)
     rule_n = normalize_rule(rule)
-    verdict_dir = os.path.join(output_dir, "verdicts")
-    lineage_dir = os.path.join(output_dir, "lineage")
     spark = batch_df.sparkSession
     prefix = f"stream-b{batch_id:09d}"
-    try:
-        # the '-' terminator makes the check exact: without it, batch id
-        # 1_000_000_000 (which outgrows the 9-digit padding) would
-        # prefix-match batch 100_000_000's rows and be silently dropped
-        already = (spark.read.parquet(lineage_dir)
-                   .filter(F.col("run_id").startswith(prefix + "-"))
-                   .limit(1).count() > 0)
-    except AnalysisException as e:
-        # no lineage yet = first commit ever. Any OTHER read failure must
-        # raise: treating a transient IO error as "not committed" would
-        # re-commit a replayed batch under a new uuid run_id and
-        # read_verdicts would return its rows twice, forever
-        if not is_missing_path(e):
-            raise
-        already = False
-    if already:
+    # the '-' terminator makes the check exact: without it, batch id
+    # 1_000_000_000 (which outgrows the 9-digit padding) would prefix-match
+    # batch 100_000_000's rows and be silently dropped
+    lineage = runner._read_written(spark, os.path.join(output_dir, "lineage"))
+    if lineage is not None and (lineage
+                                .filter(F.col("run_id").startswith(prefix + "-"))
+                                .limit(1).count() > 0):
         return None  # replayed micro-batch that was fully committed
 
     if profile_cols:
         from xema_spark import stats as _stats
 
-        # baseline is validated BEFORE the empty-batch skip: a typo'd
-        # drift_baseline_run must fail on the stream's FIRST trigger, not
-        # hours later when the first non-empty batch arrives
-        base = None
-        if drift_baseline_run is not None:
-            base = _stats.read_baseline_profile(spark, output_dir,
-                                                drift_baseline_run,
-                                                profile_cols)
-        prof = _stats.stats_profile(batch_df, profile_cols).localCheckpoint()
-        # an EMPTY micro-batch (recovery trigger, no new files) carries no
-        # data signal: scoring it would read every distribution as collapsed
-        # and a fail_on_drift gate would kill a healthy stream. The profile
-        # itself tells us (n_rows aggregate) — no extra isEmpty() pass.
-        if prof.head()["n_rows"] > 0:
-            _stats.write_stats_sidecar(prof, output_dir, prefix)
-            if base is not None:
-                excl = (_stats.SCALE_DEPENDENT_METRICS
-                        if drift_exclude_metrics is None
-                        else drift_exclude_metrics)
-                report = _stats.score_against_baseline(
-                    prof, base, drift_baseline_run, output_dir, prefix,
-                    exclude_metrics=excl)
-                if fail_on_drift:
-                    drifted = [(r["column"], r["metric"])
-                               for r in report.filter("drifted").collect()]
-                    if drifted:
-                        raise StreamDriftError(
-                            f"micro-batch {batch_id} drifted vs baseline "
-                            f"{drift_baseline_run!r} on {drifted}; verdicts "
-                            "NOT committed")
+        # a typo'd drift_baseline_run fails on the stream's FIRST trigger,
+        # empty or not; an EMPTY micro-batch (recovery trigger, no new
+        # files) is then skipped, and a drifted one raises before its write
+        excl = (_stats.SCALE_DEPENDENT_METRICS if drift_exclude_metrics is None
+                else drift_exclude_metrics)
+        drifted = _stats.profile_and_score(
+            batch_df, profile_cols, output_dir, prefix, drift_baseline_run,
+            exclude_metrics=excl, skip_empty=True)
+        if fail_on_drift and drifted:
+            raise StreamDriftError(
+                f"micro-batch {batch_id} drifted vs baseline "
+                f"{drift_baseline_run!r} on {drifted}; verdicts NOT committed")
 
     run_id = f"{prefix}-{uuid.uuid4().hex[:6]}"
-    compiled = compile_rule(rule_n, None, batch_df.schema)
-    t0 = time.time()
-    (enrich_verdicts(batch_df, compiled, n_buckets)
-     .withColumn("run_id", F.lit(run_id))
-     .repartition(n_buckets, "bucket")
-     .write.mode("append").partitionBy("run_id", "bucket")
-     .parquet(verdict_dir))
-    commit_lineage(spark, output_dir, run_id, time.time() - t0)
+    elapsed = runner._write_verdicts(batch_df, rule_n, output_dir, run_id,
+                                     n_buckets, n_buckets)
+    runner.commit_lineage(spark, output_dir, run_id, elapsed)
     return run_id
 
 
@@ -293,18 +232,9 @@ def commit_ingest_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     writes (survivors, store rows) read the materialized result."""
     import os
 
-    from pyspark.errors import AnalysisException
-
     from xema_spark import dedup
-    from xema_spark.runner import is_missing_path
 
-    spark = batch_df.sparkSession
-    store = None
-    try:
-        store = spark.read.parquet(store_dir)
-    except AnalysisException as e:
-        if not is_missing_path(e):
-            raise
+    store = runner._read_written(batch_df.sparkSession, store_dir)
     if store is not None:
         if (store.filter(F.col("ingest_batch") == batch_id)
                 .limit(1).count() > 0):
