@@ -525,11 +525,10 @@ def _q_decontaminate_semantic(spark, sf_dir):
     return similarity.decontaminate_semantic(corpus, bench, threshold=0.4)
 
 
-def _q_dedup_components(spark, sf_dir):
-    """Transitive near-dup grouping: consecutive-doc 3-gram Jaccard edges
-    (threshold 0.28) -> connected components by min-label propagation.
-    The DuckDB oracle recomputes reachability with a recursive CTE."""
-    d = _docs(spark, sf_dir, "doc_id", "text")
+def _consecutive_jaccard_edges(d):
+    """Edge frame of the dedup_components family: (doc_a, doc_b, jaccard)
+    for consecutive doc ids (doc_b = doc_a + 1) whose 3-gram shingle sets
+    have Jaccard >= 0.28."""
     sh = d.select("doc_id", dedup.shingles(F.col("text"), n=3, max_shingles=4096).alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select((F.col("doc_id") - 1).alias("doc_a"),
@@ -537,8 +536,17 @@ def _q_dedup_components(spark, sf_dir):
     j = a.join(b, "doc_a")
     jac = (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
            / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)))
-    edges = j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")) \
+    return j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")) \
         .filter(F.col("jaccard") >= 0.28)
+
+
+def _q_dedup_components(spark, sf_dir):
+    """Transitive near-dup grouping: consecutive-doc 3-gram Jaccard edges
+    (threshold 0.28) -> connected components (dedup.connected_components:
+    driver-side union-find at this size). The DuckDB oracle recomputes
+    reachability with a recursive CTE."""
+    d = _docs(spark, sf_dir, "doc_id", "text")
+    edges = _consecutive_jaccard_edges(d)
     return dedup.connected_components(edges)
 
 
@@ -552,16 +560,7 @@ def _q_dedup_best_keeper(spark, sf_dir):
     DuckDB re-derives reachability with the same recursive CTE plus a
     per-component keeper window."""
     d = _docs(spark, sf_dir, "doc_id", "text")
-    sh = d.select("doc_id", dedup.shingles(F.col("text"), n=3,
-                                           max_shingles=4096).alias("sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select((F.col("doc_id") - 1).alias("doc_a"),
-                  F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = a.join(b, "doc_a")
-    jac = (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-           / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)))
-    edges = j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")) \
-        .filter(F.col("jaccard") >= 0.28)
+    edges = _consecutive_jaccard_edges(d)
     scores = d.select("doc_id",
                       F.coalesce(F.length("text"), F.lit(0))
                       .cast("double").alias("score"))
@@ -571,19 +570,11 @@ def _q_dedup_best_keeper(spark, sf_dir):
 def _q_dedup_components_star(spark, sf_dir):
     """Same component problem through the large-star/small-star formulation
     (dedup.connected_components_star, O(log n) rounds): identical labeling,
-    identical recursive-CTE oracle — the scale-path variant is driver-checked
-    against the same ground truth as the label-propagation default."""
+    identical recursive-CTE oracle — the scale-path algorithm is checked
+    against the same ground truth as the driver-side union-find default."""
     d = _docs(spark, sf_dir, "doc_id", "text")
-    sh = d.select("doc_id", dedup.shingles(F.col("text"), n=3, max_shingles=4096).alias("sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select((F.col("doc_id") - 1).alias("doc_a"),
-                  F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = a.join(b, "doc_a")
-    jac = (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-           / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)))
-    edges = j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")) \
-        .filter(F.col("jaccard") >= 0.28)
-    return dedup.connected_components(edges, algorithm="star")
+    edges = _consecutive_jaccard_edges(d)
+    return dedup.connected_components_star(edges)
 
 
 def _q_cast_union(spark, sf_dir):

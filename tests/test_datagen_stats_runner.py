@@ -244,6 +244,17 @@ def test_runner_single_pass_and_resume(spark, tmp_path):
     assert lin.count() == 8
 
 
+def test_empty_input_into_fresh_output_dir(spark, tmp_path):
+    """An empty input leaves verdicts/ with no data and no lineage: the run
+    reports zero totals instead of failing to infer the committed view's
+    schema."""
+    docs = gen_documents(spark, N).limit(0)
+    m = run_validation(spark, docs, FLAGSHIP_RULE, str(tmp_path / "out"),
+                       n_buckets=2)
+    assert (m["n_rows"], m["n_valid"], m["n_violations"]) == (0, 0, 0)
+    assert (m["scan_rows"], m["duplicate_doc_ids"]) == (0, 0)
+
+
 def test_runner_profile_sidecar_and_drift_gate(spark, tmp_path):
     """run_validation(profile_cols=...) writes a run_id-stamped profile
     sidecar; a second run with drift_baseline_run gates itself against it

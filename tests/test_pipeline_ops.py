@@ -38,8 +38,10 @@ class TestText:
             ("le chat est dans la maison avec les enfants",),
             ("xyzzy qwerty",),
         ], ["text"])
-        got = [r[0] for r in df.select(text.lang_id(F.col("text"))).collect()]
-        assert got == ["en", "de", "fr", "und"]
+        df = df.withColumn("doc_id", F.monotonically_increasing_id())
+        got = {r["doc_id"]: r["lang_pred"]
+               for r in text.lang_id_table(df, "doc_id").collect()}
+        assert [got[i] for i in sorted(got)] == ["en", "de", "fr", "und"]
 
     def test_fingerprint(self, spark):
         df = spark.createDataFrame([("Hello, World!",), ("hello world",), ("other",)], ["text"])
@@ -82,6 +84,24 @@ class TestText:
         assert set(fused) == set(lang) == set(rep)
         for d in fused:
             assert fused[d] == (lang[d], *rep[d]), d
+
+    def test_duplicate_ids_pool_into_one_row(self, spark):
+        """Both entry points of the tagged n-gram core group by id (and the
+        text length), so two equal-length rows sharing an id give ONE
+        output row whose masses count both texts' grams (why curate
+        requires unique ids)."""
+        a, b = "a b c d e fox jumps over", "a b c d e cat naps under"
+        df = spark.createDataFrame([(1, a), (1, b), (2, a)],
+                                   "doc_id int, text string")
+        for op in (text.repetition_signals, text.lang_repetition_table):
+            r = {row["doc_id"]: row for row in op(df, "doc_id").collect()}
+            assert sorted(r) == [1, 2], op.__name__
+            # doc 2 alone: top 2-gram "jumps over" once, no repeated 5-gram
+            assert r[2]["top_ngram_frac"] == round(10 / 24, 6)
+            assert r[2]["dup_ngram_frac"] == 0.0
+            # doc 1 pools both texts: "d e" and "a b c d e" occur twice
+            assert r[1]["top_ngram_frac"] == round(2 * 3 / 24, 6)
+            assert r[1]["dup_ngram_frac"] == round(2 * 9 / 24, 6)
 
     def test_pii_scrub(self, spark):
         df = spark.createDataFrame([
@@ -194,8 +214,8 @@ class TestDedup:
         far = "nothing in common with the others at all " * 6
         df = spark.createDataFrame([(1, base), (2, near), (3, far), (4, base)],
                                    ["doc_id", "text"])
-        sigs = {r["doc_id"]: r["sim"]
-                for r in df.select("doc_id", dedup.simhash64(F.col("text")).alias("sim")).collect()}
+        sigs = {r["doc"]: r["sim"]
+                for r in dedup.simhash_signatures(df, "doc_id").collect()}
         ham = lambda a, b: bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1")
         assert ham(1, 4) == 0                 # identical docs -> identical sigs
         assert ham(1, 2) < ham(1, 3)          # near-dup closer than unrelated
@@ -395,10 +415,11 @@ def test_ivf_centroid_selection(spark):
         similarity.ivf_topk(emb.filter(F.col("vec_id") < 0), q, n_cells=4)
 
 
-def test_star_cc_equivalent_to_label_propagation(spark):
+def test_star_cc_equivalent_to_union_find(spark):
     """large-star/small-star must produce the same (doc -> component-min)
-    labeling as min-label propagation on random graphs, and converge in
-    O(log n) rounds on a chain where label propagation needs O(diameter)."""
+    labeling as the driver-side union-find on random graphs, and converge
+    in O(log n) rounds on a chain where label propagation needs
+    O(diameter)."""
     import random
 
     from xema_spark import dedup
@@ -407,11 +428,11 @@ def test_star_cc_equivalent_to_label_propagation(spark):
     edges = {(rnd.randrange(60), rnd.randrange(60)) for _ in range(80)}
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    lbl = {r["doc"]: r["component"]
-           for r in dedup.connected_components(pairs, algorithm="label").collect()}
+    uf = {r["doc"]: r["component"]
+          for r in dedup.connected_components(pairs).collect()}
     star = {r["doc"]: r["component"]
-            for r in dedup.connected_components(pairs, algorithm="star").collect()}
-    assert lbl == star
+            for r in dedup.connected_components_star(pairs).collect()}
+    assert uf == star
 
     # chain 0-1-2-...-63: diameter 63, star must finish in O(log n) rounds
     chain = spark.createDataFrame([(i, i + 1) for i in range(63)],
@@ -422,29 +443,54 @@ def test_star_cc_equivalent_to_label_propagation(spark):
     assert set(comp.values()) == {0}
 
 
-def test_label_cc_raises_when_not_converged(spark):
+def test_star_cc_raises_when_not_converged(spark):
     """max_iter rounds without a fixed point is an error, not a labeling:
-    a 4-node chain needs more than one label-propagation round."""
+    a 4-node chain needs more than one large-star/small-star round (the
+    first round changes the edge set, so its checksum cannot repeat)."""
     from xema_spark import dedup
 
     chain = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["doc_a", "doc_b"])
     with pytest.raises(RuntimeError, match="max_iter=1"):
-        dedup.connected_components(chain, algorithm="label", max_iter=1)
+        dedup.connected_components_star(chain, max_iter=1)
+
+
+def test_cc_past_the_driver_bound_is_star(spark, monkeypatch):
+    """connected_components reads CC_DRIVER_BOUND at call time: with the
+    bound at 0 every pair set takes the distributed star path, and gives
+    the same labeling as the driver-side union-find default."""
+    import random
+
+    from xema_spark import dedup
+
+    rnd = random.Random(7)
+    edges = {(rnd.randrange(60), rnd.randrange(60)) for _ in range(80)}
+    pairs = spark.createDataFrame([(a, b) for a, b in edges if a != b],
+                                  ["doc_a", "doc_b"])
+    uf = {r["doc"]: r["component"]
+          for r in dedup.connected_components(pairs).collect()}
+    star_calls = []
+    star = dedup.connected_components_star
+    monkeypatch.setattr(dedup, "connected_components_star",
+                        lambda *a: star_calls.append(a) or star(*a))
+    monkeypatch.setattr(dedup, "CC_DRIVER_BOUND", 0)
+    got = {r["doc"]: r["component"]
+           for r in dedup.connected_components(pairs).collect()}
+    assert len(star_calls) == 1
+    assert got == uf
 
 
 def test_star_cc_self_loop_only_doc(spark):
     """A doc appearing ONLY in self-pairs must still get a (doc, doc)
-    component row from BOTH variants — drop-in equivalence (ADVICE r3:
+    component row from BOTH algorithms — drop-in equivalence (ADVICE r3:
     star derived its node set after filtering u!=v, losing such docs)."""
     from xema_spark import dedup
 
     pairs = spark.createDataFrame(
         [(1, 2), (3, 3), (2, 1), (4, 4), (4, 5)], ["doc_a", "doc_b"])
     want = {1: 1, 2: 1, 3: 3, 4: 4, 5: 4}
-    for algo in ("label", "star"):
-        got = {r["doc"]: r["component"]
-               for r in dedup.connected_components(pairs, algorithm=algo).collect()}
-        assert got == want, algo
+    for cc in (dedup.connected_components, dedup.connected_components_star):
+        got = {r["doc"]: r["component"] for r in cc(pairs).collect()}
+        assert got == want, cc.__name__
 
 
 def test_ivf_trained_centroids_improve_recall(spark):
@@ -498,17 +544,17 @@ def test_top_tokens_take_ordered(spark):
 
 
 def test_star_cc_string_ids(spark):
-    """algorithm='star' must be a drop-in for string doc ids (the engine's
-    own 'doc-XXXXXXXX' format) — no long cast, lexicographic minima, same
-    labeling as the label variant."""
+    """connected_components_star must be a drop-in for string doc ids (the
+    engine's own 'doc-XXXXXXXX' format) — no long cast, lexicographic
+    minima, same labeling as the driver-side union-find."""
     pairs = spark.createDataFrame(
         [("doc-b", "doc-a"), ("doc-b", "doc-c"), ("x", "y")],
         ["doc_a", "doc_b"])
     star = {r["doc"]: r["component"]
-            for r in dedup.connected_components(pairs, algorithm="star").collect()}
-    lbl = {r["doc"]: r["component"]
-           for r in dedup.connected_components(pairs, algorithm="label").collect()}
-    assert star == lbl
+            for r in dedup.connected_components_star(pairs).collect()}
+    uf = {r["doc"]: r["component"]
+          for r in dedup.connected_components(pairs).collect()}
+    assert star == uf
     assert star["doc-a"] == star["doc-b"] == star["doc-c"] == "doc-a"
     assert star["x"] == star["y"] == "x"
 

@@ -291,15 +291,17 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str,
 #: Pair-count bound under which connected components resolve DRIVER-SIDE
 #: (one bounded collect + union-find) instead of iteratively on the cluster.
 #: Near-dup pair sets are LSH-collision-sized — orders of magnitude smaller
-#: than the corpus — so even at the 100 TB shape they are usually a few
-#: hundred MB of ids; 2M pairs collect to ~100-200 MB on the driver (well
-#: under driver.maxResultSize). Past the bound the distributed algorithms
-#: take over unchanged. Rationale (guide §1.2/§5): each distributed round
-#: is 2-4 Spark jobs of fixed scheduler latency, and the label/star loops
-#: need several rounds plus one extra to detect the fixed point — a bounded
-#: driver-side aggregate (like the centroid draws and strata counts
-#: elsewhere) replaces ~10-30 jobs with one.
-CC_DRIVER_BOUND = 2_000_000
+#: than the corpus. Measured Python-driver peak-RSS growth of the collect
+#: plus union-find plus createDataFrame on a 250k-edge chain (local[2] on a
+#: 4-vCPU VM, JVM side not counted): +116 MB with long ids, +143 MB with
+#: 12-char string ids, ~4.5 s; 2M pairs took +909 MB / +1,136 MB and
+#: 18-22 s. Past the bound the distributed star algorithm takes over.
+#: Rationale (guide §1.2/§5): each distributed round is 2-4 Spark jobs of
+#: fixed scheduler latency, and the star loop needs several rounds plus one
+#: extra to detect the fixed point — a bounded driver-side aggregate (like
+#: the centroid draws and strata counts elsewhere) replaces ~10-30 jobs
+#: with one.
+CC_DRIVER_BOUND = 250_000
 
 
 def _driver_components(pairs: DataFrame, a_col: str, b_col: str,
@@ -307,8 +309,8 @@ def _driver_components(pairs: DataFrame, a_col: str, b_col: str,
     """Bounded driver-side union-find: None when the pair set exceeds
     `bound` (caller falls back to the distributed algorithm). Labels every
     node with the minimum id reachable from it — identical output contract
-    to the label/star variants (ids compare in Spark's binary string order;
-    ASCII ids and numeric ids order identically in Python)."""
+    to connected_components_star (ids compare in Spark's binary string
+    order; ASCII ids and numeric ids order identically in Python)."""
     rows = pairs.select(a_col, b_col).limit(bound + 1).collect()
     if len(rows) > bound:
         return None
@@ -347,77 +349,21 @@ def _driver_components(pairs: DataFrame, a_col: str, b_col: str,
 
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
-                         b_col: str = "doc_b", max_iter: int = 50,
-                         algorithm: str = "auto",
-                         driver_bound: int = CC_DRIVER_BOUND) -> DataFrame:
+                         b_col: str = "doc_b", max_iter: int = 50) -> DataFrame:
     """Transitive near-dup grouping: label every vertex of the pair graph
     with the minimum id reachable from it. Returns (doc, component).
 
-    algorithm='auto' (default): pair sets within `driver_bound` rows are
-    collected once and solved with union-find on the driver (pair graphs
-    are LSH-collision-sized, not corpus-sized — a bounded driver aggregate
-    like the centroid/strata collects elsewhere), replacing the 10-30
-    fixed-latency jobs of the iterative variants with one; larger graphs
-    fall through to 'star' (O(log n) rounds) automatically.
-
-    algorithm='label' (oracle-checked): min-label propagation,
-    driver-coordinated — each round is one join + partial-aggregated groupBy
-    over the PAIR set (which is orders of magnitude smaller than the corpus
-    — only docs that collided in LSH), converging in O(component diameter)
-    rounds; near-dup clusters are shallow in practice (boilerplate
-    families), so this terminates in a handful of rounds.
-
-    algorithm='star': the large-star/small-star formulation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
-    rounds on adversarially long chains; see connected_components_star.
-
-    Both variants piggyback their convergence check on the SAME job that
-    materializes the round (df.observe + localCheckpoint) instead of firing
-    a separate per-round count action, so a k-round run launches k jobs,
-    not 2k. localCheckpoint truncates the growing lineage so round N
-    doesn't replay rounds 1..N-1. Either variant raises RuntimeError when
-    max_iter rounds pass without reaching its fixed point."""
-    if algorithm == "auto":
-        fast = _driver_components(pairs, a_col, b_col, driver_bound)
-        if fast is not None:
-            return fast
-        return connected_components_star(pairs, a_col, b_col, max_iter)
-    if algorithm == "star":
-        return connected_components_star(pairs, a_col, b_col, max_iter)
-    from pyspark.sql import Observation
-
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))) \
-        .distinct().localCheckpoint()
-    labels = edges.select(F.col("src").alias("node")).distinct() \
-        .withColumn("lbl", F.col("node"))
-    for i in range(max_iter):
-        nbr = (edges.join(labels, edges["src"] == labels["node"])
-               .select(F.col("dst").alias("node"), F.col("lbl")))
-        # EXACT convergence: the round's own label row is tagged (is_old) so
-        # the same groupBy that computes the new min-label also recovers the
-        # previous one (each node contributes exactly one old row), and the
-        # observed metric is the count of nodes whose label actually changed
-        # this round — zero changes IS a fixed point, no hash-collision
-        # caveat (ADVICE r3: a sum-of-hash checksum could cancel). The count
-        # still rides the localCheckpoint materialization job via observe,
-        # so a k-round run stays k jobs.
-        obs = Observation(f"cc_label_{i}")
-        merged = (nbr.withColumn("is_old", F.lit(False))
-                  .unionByName(labels.select("node", "lbl")
-                               .withColumn("is_old", F.lit(True))))
-        labels = (merged.groupBy("node")
-                  .agg(F.min("lbl").alias("lbl"),
-                       F.max(F.when(F.col("is_old"), F.col("lbl"))).alias("_prev"))
-                  .observe(obs, F.count_if(F.col("lbl") != F.col("_prev")).alias("changed"))
-                  .drop("_prev")
-                  .localCheckpoint())
-        if obs.get["changed"] == 0:
-            break
-    else:
-        raise RuntimeError(f"label propagation did not converge in max_iter={max_iter} rounds")
-    return labels.select(F.col("node").alias("doc"), F.col("lbl").alias("component"))
+    Pair sets within CC_DRIVER_BOUND rows (read at call time) are collected
+    once and solved with union-find on the driver (pair graphs are
+    LSH-collision-sized, not corpus-sized — a bounded driver aggregate like
+    the centroid/strata collects elsewhere), replacing the 10-30
+    fixed-latency jobs of the iterative algorithm with one; larger graphs
+    go to connected_components_star (O(log n) rounds, raises RuntimeError
+    when max_iter rounds end without a fixed point)."""
+    fast = _driver_components(pairs, a_col, b_col, CC_DRIVER_BOUND)
+    if fast is not None:
+        return fast
+    return connected_components_star(pairs, a_col, b_col, max_iter)
 
 
 def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
@@ -434,21 +380,22 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
     convergence is detected from an order-independent checksum
     (count + two independently-seeded sum(xxhash64) digests) observed on
     the same job that materializes the round's edges — no extra per-round
-    action. The edge set only shrinks/rewires toward minima (monotone), so
-    an unchanged checksum across a full round indicates a fixed point with
-    overwhelming probability (a premature stop needs changed edges whose
-    hash-delta sums cancel under BOTH seeds at equal count, ~2^-62 per
-    round — not a proof; the label variant's change-count is exact).
-    Raises RuntimeError when max_iter rounds end without an unchanged
-    checksum."""
+    action (localCheckpoint truncates the lineage, so round N does not
+    replay rounds 1..N-1). The edge set only shrinks/rewires toward minima
+    (monotone), so an unchanged checksum across a full round indicates a
+    fixed point with overwhelming probability (a premature stop needs
+    changed edges whose hash-delta sums cancel under BOTH seeds at equal
+    count, ~2^-62 per round — not a proof; tests compare it against the
+    exact driver-side union-find). Raises RuntimeError when max_iter
+    rounds end without an unchanged checksum."""
     from pyspark.sql import Observation
 
     # ids keep their native type (string doc ids order lexicographically,
-    # exactly as the label variant's F.min does) — casting to long would
+    # as the driver-side union-find compares them) — casting to long would
     # crash under ANSI on the engine's own 'doc-XXXXXXXX' id format.
     # The node set comes from the UNFILTERED pair frame: a doc appearing
-    # only in self-pairs must still get its (doc, doc) output row, matching
-    # algorithm='label' drop-in (ADVICE r3)
+    # only in self-pairs must still get its (doc, doc) output row, as it
+    # does from the driver path (ADVICE r3)
     raw = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     nodes = (raw.select(F.col("u").alias("node"))
              .unionByName(raw.select(F.col("v").alias("node")))
@@ -501,18 +448,16 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
 
 
 def near_dup_losers(dups: DataFrame, id_col: str = "doc_id",
-                    transitive: bool = True,
-                    algorithm: str = "auto") -> DataFrame:
+                    transitive: bool = True) -> DataFrame:
     """Doc ids to DROP given a verified near-dup pair frame (doc_a, doc_b):
-    transitive=True groups pairs into connected components ('auto' by
-    default — bounded driver-side union-find, star fallback on graphs past
-    the bound) and keeps each component's minimum
-    id; transitive=False is per-pair pruning (drop the greater id of every
+    transitive=True groups pairs into connected components (bounded
+    driver-side union-find, star on graphs past the bound) and keeps each
+    component's minimum id; transitive=False is per-pair pruning (drop the greater id of every
     verified pair — cheaper, no iterative rounds, but splits A~B~C when
     A!~C). The ONE place this policy lives — minhash_dedupe and
     pipeline.curate both derive their survivor sets from it."""
     if transitive:
-        comp = connected_components(dups, algorithm=algorithm)
+        comp = connected_components(dups)
         return comp.filter(F.col("doc") != F.col("component")) \
             .select(F.col("doc").alias(id_col))
     return dups.select(F.greatest("doc_a", "doc_b").alias(id_col)).distinct()
@@ -521,8 +466,7 @@ def near_dup_losers(dups: DataFrame, id_col: str = "doc_id",
 
 def near_dup_losers_by(dups: DataFrame, scores: DataFrame,
                        id_col: str = "doc_id", score_col: str = "score",
-                       transitive: bool = True,
-                       algorithm: str = "auto") -> DataFrame:
+                       transitive: bool = True) -> DataFrame:
     """near_dup_losers with a QUALITY-AWARE keeper: each duplicate group
     keeps its BEST-scoring member (ties -> smallest id) instead of the
     smallest id — the policy a curation pipeline actually wants (keep the
@@ -542,7 +486,7 @@ def near_dup_losers_by(dups: DataFrame, scores: DataFrame,
     sc = scores.select(F.col(id_col).alias("doc"),
                        F.col(score_col).cast("double").alias("_s"))
     if transitive:
-        comp = connected_components(dups, algorithm=algorithm)
+        comp = connected_components(dups)
         j = (comp.join(sc, "doc", "left")
              .withColumn("_s", F.coalesce("_s", F.lit(float("-inf")))))
         # keeper = min(struct(-score, doc)): highest score, then lowest id
@@ -710,26 +654,6 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str = "text",
         sig = sig + F.when(F.col(f"v{b}") > 0, F.lit(bit_val).cast("long")) \
                      .otherwise(F.lit(0).cast("long"))
     return per.select("doc", sig.alias("sim"))
-
-
-def simhash64(col: Column) -> Column:
-    """DEPRECATED single-Column SimHash (interpreted higher-order functions
-    re-evaluate the token stream per bit — ~64x slower than
-    simhash_signatures; kept for per-row/streaming use on small inputs)."""
-    hashes = F.transform(tokens(col), lambda t: F.xxhash64(t))
-
-    def _vote_fn(b: int):
-        # NB: a default-arg lambda (lambda acc, h, _b=b) would break — pyspark
-        # derives the lambda-variable count from the function arity
-        return lambda acc, h: acc + F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) * 2 - 1
-
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _vote_fn(b))
-        bit_val = (1 << b) if b < 63 else -(1 << 63)  # avoid signed overflow
-        out = out.bitwiseOR(
-            F.when(vote > 0, F.lit(bit_val).cast("long")).otherwise(F.lit(0).cast("long")))
-    return out
 
 
 def simhash_near_dups(df: DataFrame, id_col: str, text_col: str = "text",

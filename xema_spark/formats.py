@@ -103,10 +103,6 @@ def _hostname(col: Column) -> Column:
     return (~col.rlike(r"-$")) & col.rlike(rf"(?i)^{_SUB_DOMAIN}(?:\.{_SUB_DOMAIN})*$")
 
 
-def _uri_hostname(col: Column) -> Column:
-    return (~col.rlike(r"-$")) & col.rlike(rf"(?i)^{_URI_SUB_DOMAIN}(?:\.{_URI_SUB_DOMAIN})*$")
-
-
 def _email(col: Column) -> Column:
     # leading-dot / double-dot guards + unanchored search (format.ex:181-185)
     return (~col.rlike(r"^\.")) & (~col.rlike(r"\.\.")) & col.rlike(f"(?i){_EMAIL}")

@@ -5,10 +5,9 @@ expensive stages see progressively fewer rows.
 
 Scan discipline (the 100 TB shape):
 - validation + quality ratios fuse into ONE projection over the input scan
-  (all pure Column expressions); language-ID defaults to the measured-faster
-  explode->one-groupBy table variant (see curate's lang_strategy);
-- repetition signals (the only multi-pass stage: explode n-grams -> groupBy)
-  run on filter SURVIVORS only;
+  (all pure Column expressions); language-ID and the repetition signals
+  share one tagged explode -> two groupBys (text.lang_repetition_table),
+  joined back by id;
 - exact dedupe is one window on the survivors' content hash;
 - the MinHash chain runs on the exact-deduped set, and its Jaccard verifier
   re-shingles candidate docs only (dedup.ngram_jaccard's semi-join
@@ -44,8 +43,6 @@ def curate(
     hash_fn: str = "xxhash64",
     max_shingles: int = 512,
     scrub_pii: bool = False,
-    cache_survivors: bool = True,
-    lang_strategy: str = "table",
     benchmark: DataFrame | None = None,
     decontaminate_ngram: int = 5,
     decontaminate_min_hits: int = 1,
@@ -78,7 +75,13 @@ def curate(
     cannot see; docs without an embedding row pass through. Output keeps
     `lang`, `q_alpha_ratio`,
     `top_ngram_frac`, `dup_ngram_frac` alongside the surviving columns so
-    downstream sampling can stratify on them."""
+    downstream sampling can stratify on them.
+
+    Precondition: `id_col` is unique (check with
+    stats.uniqueness_violations). The language and repetition stage groups
+    by id and text length, so same-length rows sharing an id pool their
+    n-grams into one set of signals, and the id-keyed join back fans it
+    out over every such row."""
     carry = [source_col] if max_per_source is not None else []
     if rule is not None:
         from xema_spark.compiler import validate_df
@@ -97,55 +100,28 @@ def curate(
     else:
         base = df.select(id_col, text_col, *carry)
 
-    # quality ratios + language id + repetition signals. Two shapes for the
-    # token-level stages:
-    # - 'fused': per-row HOF language argmax in the same projection (zero
-    #   shuffle, but each language score re-filters the token array through
-    #   the interpreted higher-order functions), repetition joined after;
-    # - 'table' (default): tokens AND both repetition n-gram families
-    #   explode in ONE tagged pass through text.lang_repetition_table —
-    #   two Exchanges + one id-keyed join for the whole lang+repetition
-    #   block, versus the five Exchanges + three joins of composing
-    #   lang_id_table and repetition_signals separately (guide §2.4).
-    #   Per-doc values are corpus-independent, so computing repetition
-    #   before the quality/language filter instead of after it changes no
-    #   surviving row — the conjunction of per-row gates is order-free
-    #   (pinned by the pipeline_curate oracle).
-    # Measured on the curate path (SCALING.md "curate language stage"):
-    # 'table' wins ~2x at both 5k and 100k docs — the 5-language HOF
-    # re-evaluation costs more than the token shuffle, the same lesson as
-    # minhash/simhash — so it is the default; 'fused' remains for
-    # shuffle-constrained deployments.
+    # language id and repetition share one tagged explode (two Exchanges +
+    # one id-keyed join), measured ~2x faster than a per-row higher-order
+    # language argmax (SCALING.md "curate language stage"); per-doc gates
+    # are order-free, so one filter keeps the stage-by-stage survivors.
     keep = F.col("q_alpha_ratio") >= F.lit(float(min_alpha_ratio))
     if langs:
         keep = keep & F.col("lang").isin(*langs)
     rep_keep = ((F.col("top_ngram_frac") <= F.lit(float(max_top_ngram_frac)))
                 & (F.col("dup_ngram_frac") <= F.lit(float(max_dup_ngram_frac))))
-    if lang_strategy == "table":
-        q = (T.quality_features(base, text_col)
-             .join(T.lang_repetition_table(base, id_col, text_col), id_col)
-             .filter(keep & rep_keep)
-             .select(id_col, text_col, "lang", "q_alpha_ratio",
-                     "top_ngram_frac", "dup_ngram_frac", *carry))
-    else:
-        q = (T.quality_features(base, text_col)
-             .withColumn("lang", T.lang_id(F.col(text_col)))
-             .filter(keep)
-             .select(id_col, text_col, "lang", "q_alpha_ratio", *carry))
-        rep = T.repetition_signals(q.select(id_col, text_col), id_col,
-                                   text_col)
-        q = q.join(rep, id_col).filter(rep_keep)
+    q = (T.quality_features(base, text_col)
+         .join(T.lang_repetition_table(base, id_col, text_col), id_col)
+         .filter(keep & rep_keep)
+         .select(id_col, text_col, "lang", "q_alpha_ratio",
+                 "top_ngram_frac", "dup_ngram_frac", *carry))
 
     # When the ONLY multi-reference consumer is the near-dup stage, the
     # boundary can sit AFTER the (single-reference) exact-dedupe window
     # instead of before it: one checkpoint then covers the near-dup stage's
     # four references AND the final anti-join, and the upstream gate tree
     # is materialized exactly once (guide §1.2 — fewer fixed-latency jobs).
-    defer_ckpt = (cache_survivors and benchmark is None
-                  and not paragraph_dedup and near_dup_threshold is not None)
-    if cache_survivors and not defer_ckpt and (benchmark is not None
-                                               or near_dup_threshold is not None
-                                               or paragraph_dedup):
+    defer_ckpt = benchmark is None and not paragraph_dedup
+    if not defer_ckpt:
         # stage boundary BEFORE any stage that references the survivor frame
         # more than once: the decontamination gate uses it twice (anti-join
         # left side + contaminated-id derivation) and the near-dup stage
@@ -179,8 +155,7 @@ def curate(
                             | (F.length("text_dedup") > 0))
             .select(id_col, F.col("text_dedup").alias(text_col)),
             id_col)
-        if cache_survivors and (benchmark is not None
-                                or near_dup_threshold is not None):
+        if benchmark is not None or near_dup_threshold is not None:
             # the repair join is itself a corpus-wide explode/groupBy/join;
             # without a second boundary here the decontamination gate (2
             # references) and the near-dup stage (4 references) would
@@ -228,14 +203,12 @@ def curate(
         # each duplicate component's most-atypical member. Docs WITHOUT an
         # embedding row pass through untouched (the verdict anti-join
         # removes only ids flagged is_kept = false).
-        if cache_survivors:
-            # boundary before this stage: semantic_dedupe collects its
-            # default centroids EAGERLY and the stage references the
-            # survivor frame three times (semi-join, centroid draw, final
-            # anti-join) — without the leaf, the near-dup chain above
-            # would re-execute per reference AND once at centroid-draw
-            # time (the 56efc7f lesson).
-            q = q.localCheckpoint(eager=True)
+        # boundary before this stage: semantic_dedupe collects its
+        # default centroids EAGERLY and the stage references the survivor
+        # frame three times (semi-join, centroid draw, final anti-join) —
+        # without the leaf, the near-dup chain above would re-execute per
+        # reference AND once at centroid-draw time (the 56efc7f lesson).
+        q = q.localCheckpoint(eager=True)
         surv_emb = embeddings.select(
             F.col(emb_id_col).alias(id_col), emb_vec_col).join(
             q.select(id_col), id_col, "semi")

@@ -64,13 +64,13 @@ import os
 import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.errors import AnalysisException
 
 if __package__ in (None, ""):  # executed as a script (spark-submit runner.py)
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from xema_spark.compiler import compile_rule
+from xema_spark.compiler import VIOLATION_ARRAY_TYPE, compile_rule
 from xema_spark.rules import meta_validate, normalize_rule
 
 
@@ -158,14 +158,31 @@ def _completed_buckets(spark: SparkSession, lineage_dir: str) -> set[int]:
     return {int(r["bucket"]) for r in lin.select("bucket").distinct().collect()}
 
 
+#: Columns of the committed verdict view when nothing is committed yet
+#: (doc_id as the documents-table contract types it).
+_EMPTY_VERDICTS = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("valid", T.BooleanType()),
+    T.StructField("violations", VIOLATION_ARRAY_TYPE),
+    T.StructField("media_refs", T.ArrayType(T.StringType())),
+    T.StructField("n_bytes", T.LongType()),
+])
+
+
 def read_verdicts(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed view of the verdict table: only (run_id, bucket) pairs
     recorded in the lineage sidecar are visible. Verdict files from a run
     that died between its verdict write and its lineage append (the crash
-    window) are excluded, so re-scanned buckets never appear twice."""
-    v = spark.read.parquet(os.path.join(output_dir, "verdicts"))
-    lin = (spark.read.parquet(os.path.join(output_dir, "lineage"))
-           .select("run_id", "bucket").distinct())
+    window) are excluded, so re-scanned buckets never appear twice. Empty,
+    with the verdict columns, while no verdicts or no lineage were written
+    (e.g. a first run over an empty input)."""
+    v = _read_written(spark, os.path.join(output_dir, "verdicts"))
+    lin = _read_written(spark, os.path.join(output_dir, "lineage"))
+    if v is None or lin is None:
+        return spark.createDataFrame([], _EMPTY_VERDICTS)
+    lin = lin.select("run_id", "bucket").distinct()
     return v.join(F.broadcast(lin), ["run_id", "bucket"], "left_semi")
 
 
@@ -286,8 +303,6 @@ def _append_lineage_rows(spark: SparkSession, output_dir: str, run_id: str,
         pq.write_table(table, tmp, compression="snappy")
         os.rename(tmp, final)  # atomic on a local filesystem
         return
-    from pyspark.sql import types as T
-
     schema = T.StructType([
         T.StructField("bucket", T.IntegerType()),
         T.StructField("n_rows", T.LongType()),

@@ -92,39 +92,14 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language stopword-hit ratio of the token stream (n-gram-free
-    heuristic language ID; cheap and fully columnar)."""
-    toks = tokens(col)
-    n = F.size(toks)
-    out = {}
-    for lang, words in _STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in words])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        out[lang] = F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-    return out
-
-
-def lang_id(col: Column, min_score: float = 0.05) -> Column:
-    """argmax over lang_scores; 'und' when no language clears min_score."""
-    scores = lang_scores(col)
-    best = F.lit("und")
-    best_score = F.lit(float(min_score))
-    for lang, s in scores.items():
-        better = s > best_score
-        best = F.when(better, F.lit(lang)).otherwise(best)
-        best_score = F.when(better, s).otherwise(best_score)
-    return best
-
-
 def lang_id_table(df: DataFrame, id_col: str, text_col: str = "text",
                   out_col: str = "lang_pred", min_score: float = 0.05) -> DataFrame:
     """Scalable language-ID: explode tokens once, ONE groupBy(id) with one
     counting aggregate per language (partial aggregation collapses each doc
-    map-side), then argmax. Equivalent to lang_id() but the token stream is
-    materialized exactly once instead of being re-evaluated per language by
-    the interpreted higher-order functions. One output row per distinct id
-    (ids are assumed unique, the usual corpus contract)."""
+    map-side), then argmax. The token stream is materialized exactly once
+    instead of being re-evaluated per language by interpreted higher-order
+    functions. One output row per distinct id (ids are assumed unique, the
+    usual corpus contract)."""
     # explode_outer keeps zero-token docs as one NULL-token row, so every
     # doc gets its output row from the ONE groupBy — no second scan of df
     # and no join-back (two fewer Exchanges than the explode+left-join
@@ -137,15 +112,26 @@ def lang_id_table(df: DataFrame, id_col: str, text_col: str = "text",
         aggs.append(F.count(F.when(F.col("__t").isin(words), True))
                     .alias(f"__h_{lang}"))
     per = toks.groupBy(id_col).agg(*aggs)
-    # greatest(__n, 1) keeps the division ANSI-safe for zero-token docs;
-    # the __n == 0 branch below decides those rows before scores matter
-    denom = F.greatest(F.col("__n"), F.lit(1))
-    scores = {lang: F.col(f"__h_{lang}") / denom for lang in _STOPWORDS}
-    m = F.greatest(*scores.values())
-    pick = F.when((F.col("__n") == 0) | (m <= min_score), F.lit("und"))
-    for lang in _STOPWORDS:  # first max wins, same tie-break as lang_id()
-        pick = pick.when(scores[lang] == m, F.lit(lang))
+    pick = _lang_pick(F.col("__n"),
+                      {lang: F.col(f"__h_{lang}") for lang in _STOPWORDS},
+                      min_score)
     return per.select(id_col, pick.alias(out_col))
+
+
+def _lang_pick(n_tok: Column, hits: dict[str, Column],
+               min_score: float) -> Column:
+    """The language argmax of both language-ID operators: per-language
+    stopword-hit ratio, 'und' for a zero-token doc or when no ratio clears
+    min_score, first language in _STOPWORDS order wins a tie.
+    greatest(n_tok, 1) keeps the division ANSI-safe for zero-token docs,
+    which the n_tok == 0 branch decides before scores matter."""
+    denom = F.greatest(n_tok, F.lit(1))
+    scores = {lang: hits[lang] / denom for lang in _STOPWORDS}
+    m = F.greatest(*scores.values())
+    pick = F.when((n_tok == 0) | (m <= min_score), F.lit("und"))
+    for lang in _STOPWORDS:
+        pick = pick.when(scores[lang] == m, F.lit(lang))
+    return pick
 
 
 def top_tokens(df: DataFrame, text_col: str = "text", k: int = 50,
@@ -172,11 +158,6 @@ def fingerprint_md5(col: Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def fingerprint64(col: Column) -> Column:
-    """64-bit whole-document fingerprint (xxhash64 of normalized text)."""
-    return F.xxhash64(normalize_text(col))
-
-
 def repetition_signals(df: DataFrame, id_col: str, text_col: str = "text",
                        top_n: int = 2, dup_n: int = 5) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021, §A1.1 —
@@ -191,54 +172,16 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str = "text",
     buys no extra filtering power.
 
     Scale shape: BOTH n-gram families explode in ONE pass as (doc, tag,
-    gram) rows — tag 0 = top_n-grams, tag 1 = dup_n-grams, so the two
-    masses share one groupBy(doc, tag, gram) count and one groupBy(doc)
-    rollup (two Exchanges total, versus four Exchanges + two joins when
-    each family aggregated separately — guide §2.4; the per-(doc, gram)
-    counts and the final masses are bit-identical). The
+    gram) rows, so the two masses share one groupBy(doc, tag, gram) count
+    and one groupBy(doc) rollup (two Exchanges total, versus four Exchanges
+    + two joins when each family aggregated separately — guide §2.4). The
     most-frequent gram is max(struct(cnt, len, gram)) — one aggregate, a
     deterministic (cnt, len, gram) tie-break, no window. Map-side partial
     aggregation bounds partitions by doc size, never a per-row
-    higher-order recomputation (the minhash lesson)."""
-    toks = tokens(F.col(text_col))
-    n_tokens = F.size(toks)
-
-    def grams(n: int, tag: int) -> Column:
-        return F.when(
-            n_tokens >= n,
-            F.transform(F.sequence(F.lit(1), n_tokens - (n - 1)),
-                        lambda i: F.struct(
-                            F.lit(tag).alias("tag"),
-                            F.concat_ws(" ", F.slice(toks, i, n))
-                            .alias("gram"))),
-        ).otherwise(F.array().cast(
-            "array<struct<tag:int,gram:string>>"))
-
-    # explode_outer + n_chars carried through the grouping keys (n_chars is
-    # functionally determined by doc): zero-gram docs keep their output row
-    # without a join-back, so the operator is one scan and two Exchanges
-    base = df.select(F.col(id_col).alias("doc"),
-                     F.coalesce(F.length(text_col), F.lit(0)).alias("n_chars"),
-                     F.concat(grams(top_n, 0), grams(dup_n, 1)).alias("_g"))
-    cnt = (base.select("doc", "n_chars", F.explode_outer("_g").alias("g"))
-           .groupBy("doc", "n_chars", F.col("g.tag").alias("tag"),
-                    F.col("g.gram").alias("gram"))
-           .agg(F.count(F.lit(1)).alias("cnt")))
-    m = F.max(F.when(F.col("tag") == 0,
-                     F.struct(F.col("cnt"), F.length("gram").alias("glen"),
-                              F.col("gram"))))
-    per = (cnt.groupBy("doc", "n_chars").agg(
-        (m.getField("cnt") * m.getField("glen")).cast("long")
-        .alias("top_mass"),
-        F.sum(F.when((F.col("tag") == 1) & (F.col("cnt") > 1),
-                     F.col("cnt") * F.length("gram"))
-              .otherwise(F.lit(0))).cast("long").alias("dup_mass")))
-    frac = lambda mass: F.round(
-        F.least(F.lit(1.0), F.coalesce(mass, F.lit(0)).cast("double")
-                / F.greatest(F.col("n_chars"), F.lit(1))), 6)
-    return per.select(F.col("doc").alias(id_col),
-                      frac(F.col("top_mass")).alias("top_ngram_frac"),
-                      frac(F.col("dup_mass")).alias("dup_ngram_frac"))
+    higher-order recomputation (the minhash lesson). Ids are assumed
+    unique (the corpus contract): rows sharing an id and a text length
+    pool their grams into one output row."""
+    return _tagged_ngrams(df, id_col, text_col, top_n, dup_n)
 
 
 def lang_repetition_table(df: DataFrame, id_col: str, text_col: str = "text",
@@ -246,20 +189,34 @@ def lang_repetition_table(df: DataFrame, id_col: str, text_col: str = "text",
                           lang_col: str = "lang",
                           min_score: float = 0.05) -> DataFrame:
     """lang_id_table + repetition_signals fused into ONE explode + two
-    groupBys: tokens (tag 0), top_n-grams (tag 1) and dup_n-grams (tag 2)
-    explode together as (doc, tag, item) rows, one groupBy(doc, tag, item)
-    counts them, one groupBy(doc) rolls up the language argmax AND both
-    repetition masses. Returns one row per doc:
+    groupBys: tokens, top_n-grams and dup_n-grams explode together as
+    (doc, tag, item) rows, one groupBy(doc, tag, item) counts them, one
+    groupBy(doc) rolls up the language argmax AND both repetition masses.
+    Returns one row per doc:
     (id_col, lang_col, top_ngram_frac, dup_ngram_frac).
 
-    Shares the exact score/tie-break/rounding formulas with the two
-    standalone operators (pinned by tests), so a pipeline that gates on
-    language and repetition — pipeline.curate's hot path — pays two
-    Exchanges and one join-back instead of the five Exchanges and three
-    joins of composing them separately (guide §2.4). Per-language hits
-    aggregate as sum(cnt · isin) over the counted distinct tokens, which
-    equals the per-token count. One output row per distinct id (unique-id
-    corpus contract, as lang_id_table)."""
+    Same language pick as lang_id_table and the same masses as
+    repetition_signals, so a pipeline that gates on language and
+    repetition — pipeline.curate's hot path — pays two Exchanges and one
+    join-back instead of the five Exchanges and three joins of composing
+    them separately (guide §2.4). Per-language hits aggregate as
+    sum(cnt · isin) over the counted distinct tokens, which equals the
+    per-token count. Ids are assumed unique, as in repetition_signals."""
+    return _tagged_ngrams(df, id_col, text_col, top_n, dup_n,
+                          lang_col=lang_col, min_score=min_score)
+
+
+_TOK, _TOP, _DUP = 0, 1, 2  # item tags of the _tagged_ngrams explode
+
+
+def _tagged_ngrams(df: DataFrame, id_col: str, text_col: str, top_n: int,
+                   dup_n: int, lang_col: str | None = None,
+                   min_score: float = 0.05) -> DataFrame:
+    """The tagged n-gram core of repetition_signals and (with `lang_col`)
+    lang_repetition_table: top_n-grams, dup_n-grams and, for the language
+    pick, the tokens explode as (doc, tag, item) rows; one
+    groupBy(doc, n_chars, tag, item) counts them and one groupBy(doc,
+    n_chars) rolls up the masses (and the per-language hits)."""
     toks = tokens(F.col(text_col))
     n_tokens = F.size(toks)
 
@@ -273,50 +230,48 @@ def lang_repetition_table(df: DataFrame, id_col: str, text_col: str = "text",
                             .alias("item"))),
         ).otherwise(F.array().cast("array<struct<tag:int,item:string>>"))
 
-    tok_structs = F.transform(
-        toks, lambda t: F.struct(F.lit(0).alias("tag"), t.alias("item")))
-    # n_chars is functionally determined by doc, so carrying it through the
-    # grouping keys adds no cardinality and removes the join-back a separate
-    # (doc, n_chars) frame would need — the operator is exactly two
-    # Exchanges and one scan
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        F.coalesce(F.length(text_col), F.lit(0)).alias("n_chars"),
-        F.concat(tok_structs, grams(top_n, 1), grams(dup_n, 2)).alias("_g"))
+    items = [grams(top_n, _TOP), grams(dup_n, _DUP)]
+    if lang_col is not None:
+        items.insert(0, F.transform(
+            toks, lambda t: F.struct(F.lit(_TOK).alias("tag"),
+                                     t.alias("item"))))
+    # explode_outer + n_chars carried through the grouping keys (n_chars is
+    # functionally determined by doc): zero-item docs keep their output row
+    # without a join-back, so the operator is one scan and two Exchanges
+    base = df.select(F.col(id_col).alias("doc"),
+                     F.coalesce(F.length(text_col), F.lit(0)).alias("n_chars"),
+                     F.concat(*items).alias("_g"))
     cnt = (base.select("doc", "n_chars", F.explode_outer("_g").alias("g"))
            .groupBy("doc", "n_chars", F.col("g.tag").alias("tag"),
                     F.col("g.item").alias("item"))
            .agg(F.count(F.lit(1)).alias("cnt")))
-    is_tok = F.col("tag") == 0
-    aggs = [F.sum(F.when(is_tok, F.col("cnt"))).alias("__n")]
-    for lang, words in _STOPWORDS.items():
-        aggs.append(F.sum(F.when(is_tok & F.col("item").isin(words),
-                                 F.col("cnt"))).alias(f"__h_{lang}"))
-    m_top = F.max(F.when(F.col("tag") == 1,
+    tag = F.col("tag")
+    m_top = F.max(F.when(tag == _TOP,
                          F.struct(F.col("cnt"), F.length("item").alias("glen"),
                                   F.col("item"))))
-    aggs.append((m_top.getField("cnt") * m_top.getField("glen")).cast("long")
-                .alias("top_mass"))
-    aggs.append(F.sum(F.when((F.col("tag") == 2) & (F.col("cnt") > 1),
-                             F.col("cnt") * F.length("item"))
-                      .otherwise(F.lit(0))).cast("long").alias("dup_mass"))
+    aggs = [(m_top.getField("cnt") * m_top.getField("glen")).cast("long")
+            .alias("top_mass"),
+            F.sum(F.when((tag == _DUP) & (F.col("cnt") > 1),
+                         F.col("cnt") * F.length("item"))
+                  .otherwise(F.lit(0))).cast("long").alias("dup_mass")]
+    out = [F.col("doc").alias(id_col)]
+    if lang_col is not None:
+        is_tok = tag == _TOK
+        aggs.append(F.sum(F.when(is_tok, F.col("cnt"))).alias("__n"))
+        for lang, words in _STOPWORDS.items():
+            aggs.append(F.sum(F.when(is_tok & F.col("item").isin(words),
+                                     F.col("cnt"))).alias(f"__h_{lang}"))
+        # a zero-token doc survives the explode_outer as one NULL-item row
+        # whose token sums are NULL -> coalesce to 0 -> 'und', masses 0
+        out.append(_lang_pick(
+            F.coalesce(F.col("__n"), F.lit(0)),
+            {lang: F.coalesce(F.col(f"__h_{lang}"), F.lit(0))
+             for lang in _STOPWORDS}, min_score).alias(lang_col))
     per = cnt.groupBy("doc", "n_chars").agg(*aggs)
-    # language pick: identical formulas/tie-break to lang_id_table. A
-    # zero-token doc survives the explode_outer as one NULL-item row whose
-    # token sums are NULL -> coalesce to 0 -> 'und', masses 0.
-    n_tok = F.coalesce(F.col("__n"), F.lit(0))
-    denom = F.greatest(n_tok, F.lit(1))
-    scores = {lang: F.coalesce(F.col(f"__h_{lang}"), F.lit(0)) / denom
-              for lang in _STOPWORDS}
-    m = F.greatest(*scores.values())
-    pick = F.when((n_tok == 0) | (m <= min_score), F.lit("und"))
-    for lang in _STOPWORDS:
-        pick = pick.when(scores[lang] == m, F.lit(lang))
     frac = lambda mass: F.round(
         F.least(F.lit(1.0), F.coalesce(mass, F.lit(0)).cast("double")
                 / F.greatest(F.col("n_chars"), F.lit(1))), 6)
-    return per.select(F.col("doc").alias(id_col), pick.alias(lang_col),
-                      frac(F.col("top_mass")).alias("top_ngram_frac"),
+    return per.select(*out, frac(F.col("top_mass")).alias("top_ngram_frac"),
                       frac(F.col("dup_mass")).alias("dup_ngram_frac"))
 
 
